@@ -5,21 +5,23 @@ plan:
 
   read table
     → [one pass] mapInPandas validate + dispatch + per-page extract   (§2.1-2.4)
-    → window over (url, seq): re-base span offsets to document offsets
-    → groupBy(url) assembly agg: ordered text merge + span flatten    (§2.5)
+                 + document assembly: ordered text merge + span
+                 re-base and flatten                                  (§2.5)
 
 Design notes for 100 TB scale:
-  * Validation, content-type sniff (S4/S5), size/page predicates (F1/F2) and
-    extraction (T6) run in ONE ``mapInPandas`` pass so the heavy ``html``
-    binary column is scanned exactly once and never shuffled — only the
-    (small) extracted page rows cross the wire.
-  * Rejected rows are never dropped: they surface as page_index=0 rows with a
+  * Validation, content-type sniff (S4/S5), size/page predicates (F1/F2),
+    extraction (T6) and assembly run in ONE ``mapInPandas`` pass
+    (``extract``), so the heavy ``html`` binary column is scanned exactly
+    once and the plan has no shuffle: every page of a document comes from
+    the same call in the same Arrow batch, and only finished document rows
+    leave the pass.
+  * Rejected rows are never dropped: they surface as documents with a
     ``status`` (→ lineage), mirroring the reference's failed-job statuses
     (``/root/reference/app/schemas.py:10-16``).
-  * The window and the final groupBy share the same hash partitioning on
-    ``url``; Catalyst performs ONE shuffle for both (partial aggregation is
-    not needed since rows per url ≤ max_pages and the window already
-    co-located them).
+  * The page-level API (``extract_pages`` → ``assemble_documents``) keeps
+    its JVM window over (url, seq) and ``groupBy(url)`` assembly — one url
+    shuffle — for callers that need page rows; a test pins it byte-equal
+    to the fused pass.
   * Skew (giant docs / hot hosts) is handled WITHOUT shuffling payloads:
     storage-layer bucketing (sources/writer.py staging), small input splits
     (files.maxPartitionBytes), small Arrow batches, and AQE. An explicit
@@ -428,9 +430,9 @@ def extract(
     status, error). The library-call analog of the reference's synchronous
     endpoint (SURVEY.md §3 EP3).
 
-    Input must be UNIQUE on url (url ≙ the reference's task_id); for raw
-    crawls with revisits, apply ``keep_latest_snapshot`` first — duplicate
-    urls would otherwise merge into one output row at assembly.
+    Input should be UNIQUE on url (url ≙ the reference's task_id); for raw
+    crawls with revisits, apply ``keep_latest_snapshot`` first — each input
+    row becomes its own output row, so duplicate urls give duplicate rows.
 
     FUSED single-pass since round 9: every page of a document is produced by
     the same ``_extract_one`` call inside the same Arrow batch, so document

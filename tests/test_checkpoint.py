@@ -96,12 +96,11 @@ def test_restage_with_different_n_buckets_raises(spark, corpus, tmp_path):
 
 
 def test_concurrent_buckets_complete_and_match(spark, corpus, tmp_path):
-    # concurrency > default: all buckets land, no double-writes, lineage
-    # complete — the serialized lineage/manifest section keeps durability
+    # every bucket runs at once (4 buckets < defaultParallelism): all land,
+    # no double-writes, lineage complete — only the manifest update is
+    # serialized, and durability holds
     out = str(tmp_path / "conc")
-    res = run_extract_job(
-        spark, corpus, out, run_id="rc", n_buckets=4, concurrency=3
-    )
+    res = run_extract_job(spark, corpus, out, run_id="rc", n_buckets=4)
     assert sorted(res.buckets_done) == list(range(4))
     got = read_output(spark, out)
     assert got.count() == corpus.count()
@@ -243,3 +242,168 @@ def test_corrupt_staging_marker_raises_diagnostic(spark, corpus, tmp_path):
         f.write("1")  # torn prefix of a larger legacy count
     with pytest.raises(ValueError, match="corrupt marker"):
         run_extract_job(spark, corpus, out, run_id="r3", n_buckets=1)
+
+
+def _sync_listeners(spark) -> None:
+    # job starts reach the status tracker through the async listener bus
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_bucket_runs_no_readback_or_bookkeeping_jobs(spark, corpus, tmp_path, monkeypatch):
+    """A bucket's only Spark job is its extract-and-write: status counts are
+    observed on the write (no read-back of ``data/bucket=K``) and lineage /
+    metrics rows are written without ``createDataFrame``."""
+    import os
+
+    from pyspark.sql import SparkSession
+    from pyspark.sql.readwriter import DataFrameReader
+
+    out = str(tmp_path / "nojobs")
+    run_extract_job(spark, corpus, out, run_id="r0", n_buckets=N_BUCKETS, fail_after=0)
+
+    def no_create(*a, **k):
+        raise AssertionError("bookkeeping must not build a DataFrame")
+
+    read_paths: list[str] = []
+    parquet = DataFrameReader.parquet
+
+    def recording_parquet(self, *paths, **options):
+        read_paths.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_create)
+    monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+    tracker = spark.sparkContext.statusTracker()
+    _sync_listeners(spark)
+    before = set(tracker.getJobIdsForGroup())
+    res = run_extract_job(spark, corpus, out, run_id="r1", n_buckets=N_BUCKETS)
+    _sync_listeners(spark)
+    jobs = set(tracker.getJobIdsForGroup()) - before
+    monkeypatch.undo()
+
+    assert sorted(res.buckets_done) == list(range(N_BUCKETS))
+    # buckets ran at once; the locked manifest update lost none of them
+    manifest = CheckpointManifest(os.path.join(out, "manifest.json"))
+    assert manifest.completed() == set(range(N_BUCKETS))
+    data_dir = os.path.join(out, "data")
+    assert not [p for p in read_paths if str(p).startswith(data_dir)]
+    # one footer read of the staging table + one write per bucket
+    assert len(jobs) <= N_BUCKETS + 1, sorted(jobs)
+    assert spark.read.parquet(os.path.join(out, "_metrics")).count() == 1
+
+
+def _mixed_font_pdf() -> bytes:
+    # one font decodes, one loses its codes → succeeded_partial
+    stream = b"BT /F1 12 Tf 72 700 Td (readable) Tj /F2 12 Tf 0 -20 Td <0041> Tj ET"
+    return (
+        b"%PDF-1.4\n"
+        b"1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+        b"2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n"
+        b"3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents 4 0 R"
+        b" /Resources << /Font << /F1 5 0 R /F2 6 0 R >> >> >>\nendobj\n"
+        b"4 0 obj\n<< /Length " + str(len(stream)).encode()
+        + b" >>\nstream\n" + stream + b"\nendstream\nendobj\n"
+        b"5 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /H >>\nendobj\n"
+        b"6 0 obj\n<< /Type /Font /Subtype /Type0 /BaseFont /C"
+        b" /Encoding /Identity-H >>\nendobj\n"
+        b"trailer\n<< /Root 1 0 R >>\n"
+    )
+
+
+@pytest.fixture(scope="module")
+def mixed_lineage_run(spark, corpus, tmp_path_factory):
+    """A job over the corpus plus partial-text PDFs, with a size cap that
+    rejects the largest docs, into a ``_lineage`` dir that already holds a
+    row written by Spark (as earlier versions of the runner did)."""
+    import os
+
+    from pbx_ds_ocr_server_spark.config import ExtractConfig
+    from pbx_ds_ocr_server_spark.sources.writer import LINEAGE_SCHEMA
+
+    out = str(tmp_path_factory.mktemp("mixed_lineage"))
+    spark.createDataFrame(
+        [("old", 99, 1, 1, 0, 0, 0, 0.0, 1.0, "succeeded", None, "fast")],
+        LINEAGE_SCHEMA,
+    ).coalesce(1).write.parquet(os.path.join(out, "_lineage"))
+    partial = spark.createDataFrame(
+        [(f"pdf://partial/{i}", _mixed_font_pdf()) for i in range(6)],
+        "url string, html binary",
+    )
+    src = corpus.select("url", "html").unionByName(partial)
+    cfg = ExtractConfig(max_bytes=3500)
+    run_extract_job(spark, src, out, run_id="mx", cfg=cfg, n_buckets=N_BUCKETS)
+    return out
+
+
+def test_lineage_counts_exact_over_status_mix(spark, mixed_lineage_run):
+    """Observed counts per bucket partition n_urls and equal a groupBy of
+    that bucket's written output. No input yields ``failed`` (the kernels
+    type every malformed input), so n_failed is checked against zero rows."""
+    lin = read_lineage(spark, mixed_lineage_run).filter(F.col("run_id") == "mx")
+    rows = lin.collect()
+    assert sorted(r.bucket for r in rows) == list(range(N_BUCKETS))
+    out = read_output(spark, mixed_lineage_run)
+    seen = {r.status for r in out.select("status").distinct().collect()}
+    assert {
+        "succeeded", "succeeded_empty", "succeeded_partial", "succeeded_noop",
+        "rejected_size", "rejected_unparseable",
+    } <= seen
+    by_bucket: dict[int, dict[str, int]] = {}
+    for r in out.groupBy("bucket", "status").count().collect():
+        by_bucket.setdefault(r.bucket, {})[r.status] = r["count"]
+    for r in rows:
+        assert r.n_succeeded + r.n_noop + r.n_rejected + r.n_failed == r.n_urls
+        got = by_bucket[r.bucket]
+        assert r.n_urls == sum(got.values())
+        assert r.n_succeeded == sum(
+            got.get(s, 0)
+            for s in ("succeeded", "succeeded_empty", "succeeded_partial")
+        )
+        assert r.n_noop == got.get("succeeded_noop", 0)
+        assert r.n_rejected == sum(
+            v for k, v in got.items() if k.startswith("rejected")
+        )
+        assert r.n_failed == got.get("failed", 0)
+
+
+def test_lineage_dir_mixes_spark_and_pyarrow_rows(spark, mixed_lineage_run):
+    import os
+
+    from pyspark.sql.types import StructType
+
+    from pbx_ds_ocr_server_spark.sources.writer import LINEAGE_SCHEMA
+
+    lin = read_lineage(spark, mixed_lineage_run)
+    want = StructType.fromDDL(LINEAGE_SCHEMA)
+    assert [(f.name, f.dataType) for f in lin.schema] == [
+        (f.name, f.dataType) for f in want
+    ]
+    assert sorted(r.bucket for r in lin.collect()) == list(range(N_BUCKETS)) + [99]
+    for sub in ("_lineage", "_metrics"):
+        names = os.listdir(os.path.join(mixed_lineage_run, sub))
+        # Spark's own checksum files are dot-prefixed too; a temp row is not
+        assert not [
+            n for n in names if n.startswith(".") and not n.endswith(".crc")
+        ], names
+
+
+def test_failure_before_manifest_mark_redoes_bucket(spark, corpus, tmp_path, monkeypatch):
+    """Write-then-status: a bucket whose data and lineage landed but whose
+    manifest mark failed is redone on resume, overwriting its own output."""
+    out = str(tmp_path / "crash_mark")
+    mark = CheckpointManifest.mark
+
+    def failing_mark(self, bucket, n_buckets, run_id):
+        if bucket == 1:
+            raise RuntimeError("crash before manifest.mark")
+        mark(self, bucket, n_buckets, run_id)
+
+    monkeypatch.setattr(CheckpointManifest, "mark", failing_mark)
+    with pytest.raises(RuntimeError, match="manifest.mark"):
+        run_extract_job(spark, corpus, out, run_id="r1", n_buckets=N_BUCKETS)
+    monkeypatch.undo()
+    res = run_extract_job(spark, corpus, out, run_id="r2", n_buckets=N_BUCKETS)
+    assert res.buckets_done == [1]
+    got = read_output(spark, out)
+    assert got.count() == corpus.count()
+    assert got.groupBy("url").count().filter("count > 1").count() == 0
