@@ -852,8 +852,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def extract_status_counts(spark, sf_dir):
+        # the url carries the class (https://hostN.example/{cls}/{doc_id},
+        # corpus.synthesize_row), so the corpus is synthesized once
         corpus = synthesize_corpus_df(spark, f"{sf_dir}/documents.parquet")
-        res = extract(corpus).join(corpus.select("url", "doc_class"), "url")
+        res = extract(corpus).withColumn(
+            "doc_class", F.regexp_extract("url", r"^https://[^/]+/([^/]+)/", 1)
+        )
         return res.groupBy("doc_class", "status").agg(
             F.count("*").alias("n")
         )
@@ -1458,9 +1462,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pbx_ds_ocr_server_spark.functions.text import (
             _bucketed_token_frame,
         )
-        from pbx_ds_ocr_server_spark.operators.dedup import _materialize
+        from pbx_ds_ocr_server_spark.caching import materialize
 
-        base = _materialize(
+        base = materialize(
             _bucketed_token_frame(d, "doc_id", "text", 16)
         )
         cont = sequence_pack(d, budget=512, n_buckets=16, _base=base)
@@ -1624,9 +1628,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # gopher's). The frontiers are gate survivors — tiny relative to
         # the corpus — and the checkpointed blocks are freed by the
         # ContextCleaner when the returned plan is GC'd (own_result doc).
-        from pbx_ds_ocr_server_spark.operators.dedup import _materialize
+        from pbx_ds_ocr_server_spark.caching import materialize
 
-        gophered = _materialize(gopher_filter(
+        gophered = materialize(gopher_filter(
             filtered,
             min_words=25,
             min_stopword_hits=2,
@@ -1639,7 +1643,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         eval_df = _docs(spark, sf).filter(F.col("doc_id") % 37 == 0).select(
             "text"
         )
-        decon = _materialize(decontaminate(gophered, eval_df, ngram=8))
+        decon = materialize(decontaminate(gophered, eval_df, ngram=8))
         from pbx_ds_ocr_server_spark.caching import own_result
 
         return own_result(

@@ -11,11 +11,12 @@ Architecture (SURVEY.md §7):
                      (charset sniff, HTML boilerplate strip, PDF layout parse,
                      page-range pruning). No Spark imports; unit-testable.
   * ``operators/`` — DataFrame-in/DataFrame-out composition: content-type
-                     dispatch, Arrow-batched ``mapInPandas`` extraction,
-                     per-document assembly aggregation, salting/skew helpers,
+                     dispatch, Arrow-batched ``mapInPandas`` extraction with
+                     per-document assembly in the same pass,
                      dedup / similarity / text-stats operators.
-  * ``sources/``   — table loaders + the checkpointed, lineage-recording,
-                     resumable writer.
+  * ``sources/``   — WARC reader + the checkpointed, lineage-recording,
+                     resumable writer (its hash-bucketed staging write is
+                     where skewed input is salted).
   * ``functions/`` — column-level helper expressions (built-in functions only;
                      JVM-side, codegen-friendly).
   * ``streaming/`` — optional Structured Streaming front-end (micro-batch

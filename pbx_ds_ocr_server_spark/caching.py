@@ -22,6 +22,9 @@ the driver gate consumes with one ``toPandas``). A production pipeline
 whose result is corpus-sized ends in a SINK write instead (`sources/
 writer`), after which the job runner unpersists — materializing 100 TB
 into block storage is not a cleanup strategy.
+
+:func:`materialize` is the plain eager checkpoint for a small intermediate
+that several branches re-scan, with nothing to unpersist.
 """
 
 from __future__ import annotations
@@ -52,3 +55,22 @@ def own_result(result: DataFrame, *intermediates: DataFrame) -> DataFrame:
         for df in intermediates:
             df.unpersist()
     return out
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly checkpoint a SMALL intermediate that several downstream
+    branches re-scan (candidate pairs, estimate rows, gate survivors,
+    connected-components rounds — never corpus-sized).
+
+    Reliable ``checkpoint()`` when the session has a checkpoint dir
+    (``sparkContext.setCheckpointDir``), so executor loss recovers from
+    storage; else ``localCheckpoint()`` (executor blocks, freed by the
+    ContextCleaner when the consuming plan is GC'd driver-side).
+
+    Two costs to know:
+      * reliable checkpoint files stay on disk after their frame is gone
+        unless ``spark.cleaner.referenceTracking.cleanCheckpoints=true``;
+      * the call runs a Spark job, so building a frame that uses it — and
+        any ``explain`` of that frame — is not free."""
+    sc = df.sparkSession.sparkContext
+    return df.checkpoint() if sc.getCheckpointDir() is not None else df.localCheckpoint()

@@ -8,7 +8,7 @@ per-row state (SURVEY.md §1.1).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -23,10 +23,6 @@ class ExtractConfig:
     max_blocks_per_doc: int = 50_000    # cap DOM blocks scanned per document
     # --- boilerplate scoring thresholds (our frozen spec, SURVEY.md §7 risk 2) ---
     link_density_max: float = 0.5       # blocks above this are boilerplate
-    # --- scale / skew knobs (north_rule: explicit salting + AQE) ---
-    salt_buckets: int = 0               # 0 → auto: 2 * shuffle partitions
-    arrow_max_records: int = 256        # spark.sql.execution.arrow.maxRecordsPerBatch
-                                        # (tune to 64-128 for multi-MB blob corpora)
     # --- merge rule constants (reference: pipeline.py:205) ---
     page_separator: str = "\n\n"        # full.md join separator (byte-identity!)
     # --- output rendering (reference full.md is markdown: pipeline.py:189-205
@@ -37,12 +33,6 @@ class ExtractConfig:
     html_backend: str = "fast"          # 'fast' (regex tokenizer) | 'strict'
                                         # (html.parser events); recorded in
                                         # job lineage (sources/writer.py)
-    # --- parity-only options: accepted but inert in the reference prompt
-    #     build too (dsocr_model.py:459-468 ignores them) ---
-    enable_formula: bool = True
-    enable_table: bool = True
-    language: str = "ch"
-    extra: dict = field(default_factory=dict, compare=False)
 
 
 DEFAULT_CONFIG = ExtractConfig()

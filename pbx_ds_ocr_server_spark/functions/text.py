@@ -93,13 +93,6 @@ def alpha_ratio(col: Column | str) -> Column:
     )
 
 
-def punct_ratio(col: Column | str) -> Column:
-    n = norm_text(col)
-    return F.when(F.length(n) == 0, F.lit(0.0)).otherwise(
-        F.length(F.regexp_replace(n, "[^.,;:!?]", "")) / F.length(n)
-    )
-
-
 def stopword_ratio(col: Column | str) -> Column:
     t = token_count(col)
     return F.when(t == 0, F.lit(0.0)).otherwise(_vote(col, "en") / t)

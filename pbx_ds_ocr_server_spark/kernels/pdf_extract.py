@@ -77,11 +77,6 @@ _ESC = {
 }
 
 
-def _decode_pdf_string(raw: bytes) -> str:
-    """Decode a PDF literal string body (between parens) incl. escapes."""
-    return _literal_string_bytes(raw).decode("utf-8", errors="replace")
-
-
 def _literal_string_bytes(raw: bytes) -> bytes:
     """Resolve a literal string body's escapes → raw bytes (no charset)."""
     out = bytearray()
@@ -129,13 +124,6 @@ def _tok_raw(tok: bytes) -> bytes:
         except ValueError:
             return b""
     return b""
-
-
-def _tok_text(tok: bytes) -> str:
-    """Decode a string token with the default simple-font byte mapping
-    (utf-8-with-replacement — the pre-font-layer behavior, kept for
-    callers outside the interpreter)."""
-    return _tok_raw(tok).decode("utf-8", errors="replace")
 
 
 def _is_string_tok(tok: bytes) -> bool:

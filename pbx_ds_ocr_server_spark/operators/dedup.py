@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 
+from pbx_ds_ocr_server_spark.caching import materialize
 from pbx_ds_ocr_server_spark.functions.text import fingerprint, words
 from pbx_ds_ocr_server_spark.partitioning import ensure_min_partitions
 
@@ -539,29 +540,21 @@ def connected_min_label(
     connected-components shape (GraphFrames' CC is the same agg without the
     library).
 
-    Checkpoint durability: when the session has a reliable checkpoint dir
-    configured (``spark.sparkContext.setCheckpointDir``), rounds use
-    ``df.checkpoint()`` — executor loss mid-loop recovers from storage. With
-    no checkpoint dir, falls back to ``localCheckpoint()`` (executor-held
-    blocks, no fault tolerance — fine in local mode, set a checkpoint dir on
-    a real cluster)."""
-    sc = pairs.sparkSession.sparkContext
-    reliable = sc.getCheckpointDir() is not None
-
-    def _checkpoint(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if reliable else df.localCheckpoint()
-
+    Checkpoint durability follows :func:`caching.materialize`: with a
+    checkpoint dir set, executor loss mid-loop recovers from storage; with
+    none, rounds use executor-held blocks (no fault tolerance — fine in
+    local mode, set a checkpoint dir on a real cluster)."""
     # checkpoint the (symmetrized) edge list ONCE: it is re-scanned every
     # round, and the caller's `pairs` is typically the most expensive plan
     # in this module (LSH candidates + exact-Jaccard verify in
     # dedup_near(transitive=True)) — without this, each round's count()
     # action re-ran that whole subtree twice (tenth-review fix)
-    edges = _checkpoint(
+    edges = materialize(
         pairs.select("a", "b").unionByName(
             pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
     )
-    labels = _checkpoint(
+    labels = materialize(
         edges.select(F.col("a").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
@@ -579,7 +572,7 @@ def connected_min_label(
                 labels["label"], F.coalesce(F.col("nlabel"), labels["label"])
             ).alias("label"),
         )
-        upd = _checkpoint(upd)
+        upd = materialize(upd)
         changed = upd.filter(F.col("label") < F.col("old")).count()
         labels = upd.select("id", "label")
         if changed == 0:
@@ -588,18 +581,6 @@ def connected_min_label(
         f"connected_min_label did not converge in max_iter={max_iter} rounds"
         " (a component diameter exceeds it); raise max_iter"
     )
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Eagerly checkpoint a SMALL intermediate that several downstream
-    branches re-scan (candidate pairs / estimate rows — O(near-dup docs),
-    never corpus-sized). Same durability rule as
-    :func:`connected_min_label`: reliable ``checkpoint()`` when the session
-    has a checkpoint dir, else ``localCheckpoint()`` (executor blocks,
-    freed by the ContextCleaner when the consuming plan is GC'd
-    driver-side — no unpersist contract needed)."""
-    sc = df.sparkSession.sparkContext
-    return df.checkpoint() if sc.getCheckpointDir() is not None else df.localCheckpoint()
 
 
 _REQUIRED = object()  # sentinel: dedup_near's cap must be an explicit choice
@@ -685,7 +666,7 @@ def dedup_near(
         # all re-scan this frontier — without the checkpoint each consumer
         # re-executes the band-join/estimate stages (the heavy exchanges
         # below them are AQE-reused, but the join stages are not; round 9)
-        est = _materialize(
+        est = materialize(
             _candidate_pair_estimates(sigs, bands, num_hashes)
         )
         accepted = est.filter(F.col("est_jaccard") >= hi).select("a", "b")
@@ -695,7 +676,7 @@ def dedup_near(
     else:
         # same re-scan argument: cand feeds cand_ids (twice) + the
         # verified semi-join
-        cand = _materialize(lsh_candidate_pairs(sigs, bands=bands))
+        cand = materialize(lsh_candidate_pairs(sigs, bands=bands))
     # verify candidates with exact jaccard (restricted via semi joins)
     cand_ids = cand.select(F.col("a").alias("id")).unionByName(
         cand.select(F.col("b").alias("id"))
@@ -880,7 +861,7 @@ def embedding_neardup_lsh(
     # impl='pandas' (matmul) and note the checkpoint holds (id, vec,
     # bucket) in executor storage — the standard bucketed-frontier
     # materialization.
-    b = _materialize(
+    b = materialize(
         with_lsh_bucket(df, vec_col, n_planes, dims, impl=impl).select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "bucket"
         )

@@ -18,20 +18,21 @@ Design notes for 100 TB scale:
   * Rejected rows are never dropped: they surface as documents with a
     ``status`` (→ lineage), mirroring the reference's failed-job statuses
     (``/root/reference/app/schemas.py:10-16``).
-  * The page-level API (``extract_pages`` → ``assemble_documents``) keeps
-    its JVM window over (url, seq) and ``groupBy(url)`` assembly — one url
-    shuffle — for callers that need page rows; a test pins it byte-equal
-    to the fused pass.
+  * The page-level API (``extract_pages``) runs the same pass body and
+    emits the page rows instead of assembling them. ``assemble_documents``
+    turns page rows into documents with a JVM window over (url, seq) and a
+    ``groupBy(url)`` — one url shuffle. It is the reference assembly that
+    tests/test_extract_e2e.py pins the fused pass byte-equal to.
   * Skew (giant docs / hot hosts) is handled WITHOUT shuffling payloads:
-    storage-layer bucketing (sources/writer.py staging), small input splits
-    (files.maxPartitionBytes), small Arrow batches, and AQE. An explicit
-    pre-extraction salt (operators/salting.py) is available but opt-in —
-    measured, a payload shuffle costs ~3× end-to-end (SURVEY.md §4).
+    the job runner's hash-bucketed staging write (``stage_input`` in
+    sources/writer.py), small input splits (files.maxPartitionBytes), small
+    Arrow batches, and AQE. A pre-extraction payload shuffle was measured
+    at ~3× end-to-end (SURVEY.md §4).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -51,7 +52,6 @@ from pbx_ds_ocr_server_spark.kernels.pdf_extract import (
     pdf_title,
 )
 from pbx_ds_ocr_server_spark.kernels.raster_meta import extract_raster_meta
-from pbx_ds_ocr_server_spark.operators.salting import salt_partitions
 
 SPAN_STRUCT = (
     "struct<page_index:int,kind:string,bbox:array<double>,"
@@ -66,6 +66,14 @@ DOCS_SCHEMA = (
     f"url string, text string, spans array<{SPAN_STRUCT}>, n_pages int,"
     " title string, content_type string, status string, error string"
 )
+PAGE_COLS = [
+    "url", "content_type", "n_pages", "seq", "page_index", "page_text",
+    "spans", "title", "status", "error",
+]
+DOC_COLS = [
+    "url", "text", "spans", "n_pages", "title", "content_type", "status",
+    "error",
+]
 
 # JobStatus analog (/root/reference/app/schemas.py:10-16) + rejection reasons
 ST_OK = "succeeded"
@@ -176,22 +184,16 @@ def _extract_one(url: str, payload: bytes, cfg: ExtractConfig) -> list[dict]:
                      error=f"{type(exc).__name__}: {exc}")]
 
 
-def extract_pages(
-    df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG, salted: bool = False
+def _map_payloads(
+    df: DataFrame,
+    emit: Callable[[str, bytes], list[dict]],
+    cols: list[str],
+    schema: str,
 ) -> DataFrame:
-    """(url, html, ...) → one row per (url, page). Single pass over payloads.
-
-    ``salted=False`` by default: a pre-extraction repartition would SHUFFLE
-    the raw payload bytes — measured ~3× slower end-to-end and flat scaling
-    (the blob shuffle serializes on shuffle I/O). Payload rebalancing belongs
-    at the storage layer (the job runner's bucketed staging write,
-    sources/writer.py) or to AQE skew splitting; pass ``salted=True`` only
-    when the input layout itself is pathologically skewed and cannot be
-    re-staged.
-    """
-    src = df.select("url", "html")
-    if salted:
-        src = salt_partitions(src)
+    """The one ``mapInPandas`` pass over ``(url, html)``: ``emit(url,
+    payload)`` turns each input row into its output rows, which leave the
+    pass as ``cols`` under ``schema``. The payload column is scanned once
+    and nothing is shuffled."""
     # deploy-time CID tables are a DRIVER-process registration; snapshot
     # them into the task closure so the executors' fresh module imports
     # see them too (kernels/pdf_fonts.cid_tables_snapshot docstring)
@@ -206,17 +208,22 @@ def extract_pages(
         # unconditional: reused workers may hold a PREVIOUS plan's tables,
         # and an empty snapshot must clear them (restore_cid_tables doc)
         restore_cid_tables(cid_tables)
-        cols = [
-            "url", "content_type", "n_pages", "seq", "page_index",
-            "page_text", "spans", "title", "status", "error",
-        ]
         for pdf_batch in batches:
             out: list[dict] = []
             for r in pdf_batch.itertuples():
-                out.extend(_extract_one(r.url, r.html, cfg))
+                out.extend(emit(r.url, r.html))
             yield pd.DataFrame(out, columns=cols)
 
-    return src.mapInPandas(run, schema=PAGES_SCHEMA)
+    return df.select("url", "html").mapInPandas(run, schema=schema)
+
+
+def extract_pages(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
+    """(url, html, ...) → one row per (url, page). Single pass over payloads,
+    no shuffle."""
+    return _map_payloads(
+        df, lambda url, html: _extract_one(url, html, cfg), PAGE_COLS,
+        PAGES_SCHEMA,
+    )
 
 
 def assemble_documents(
@@ -379,7 +386,10 @@ def _assemble_one(rows: list[dict], sep: str, sep_b: int) -> dict:
     """Python mirror of :func:`assemble_documents` for the page rows of ONE
     document (they are produced together by ``_extract_one``, so no shuffle
     is needed to co-locate them). Must stay semantically identical to the
-    JVM aggregation — the extract_* driver queries hash-gate both paths:
+    JVM aggregation. The extract_* driver queries run only ``extract()``,
+    so they hash-gate this path;
+    tests/test_extract_e2e.py::test_fused_extract_matches_page_assembly
+    keeps the JVM path in parity with it:
 
       * non-blank test = ``F.trim(page_text) != ''`` → strip(' ') (trim
         removes only 0x20, not general whitespace)
@@ -423,9 +433,7 @@ def _assemble_one(rows: list[dict], sep: str, sep_b: int) -> dict:
     }
 
 
-def extract(
-    df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG, salted: bool = False
-) -> DataFrame:
+def extract(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     """Full pipeline: input table → (url, text, spans, n_pages, content_type,
     status, error). The library-call analog of the reference's synchronous
     endpoint (SURVEY.md §3 EP3).
@@ -437,37 +445,16 @@ def extract(
     FUSED single-pass since round 9: every page of a document is produced by
     the same ``_extract_one`` call inside the same Arrow batch, so document
     assembly needs no url shuffle at all — it runs in Python right after
-    extraction and only the finished document rows leave the pass. That
-    removes the one Exchange the pipeline had (the page rows — extracted
-    text + spans — no longer cross the wire; guide rule: when data is
-    already co-located, don't shuffle to "group" it). The composable
-    page-level API (``extract_pages`` → ``assemble_documents``) is unchanged
-    for callers that need page rows; byte-identity of the two assembly paths
-    is pinned by tests/test_extract_e2e.py::test_fused_extract_matches_page_assembly."""
-    src = df.select("url", "html")
-    if salted:
-        src = salt_partitions(src)
-    from pbx_ds_ocr_server_spark.kernels.pdf_fonts import (
-        cid_tables_snapshot,
-        restore_cid_tables,
-    )
-
-    cid_tables = cid_tables_snapshot()
+    extraction and only the finished document rows leave the pass (guide
+    rule: when data is already co-located, don't shuffle to "group" it).
+    Byte-identity with the JVM assembly of the page-level API
+    (``extract_pages`` → ``assemble_documents``) is pinned by
+    tests/test_extract_e2e.py::test_fused_extract_matches_page_assembly."""
     sep = cfg.page_separator
     sep_b = len(sep.encode("utf-8"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        restore_cid_tables(cid_tables)
-        cols = [
-            "url", "text", "spans", "n_pages", "title", "content_type",
-            "status", "error",
-        ]
-        for pdf_batch in batches:
-            out: list[dict] = []
-            for r in pdf_batch.itertuples():
-                out.append(
-                    _assemble_one(_extract_one(r.url, r.html, cfg), sep, sep_b)
-                )
-            yield pd.DataFrame(out, columns=cols)
-
-    return src.mapInPandas(run, schema=DOCS_SCHEMA)
+    return _map_payloads(
+        df,
+        lambda url, html: [_assemble_one(_extract_one(url, html, cfg), sep, sep_b)],
+        DOC_COLS,
+        DOCS_SCHEMA,
+    )

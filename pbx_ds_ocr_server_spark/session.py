@@ -12,12 +12,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Arrow batch size: trades python-roundtrip overhead against peak batch
+# bytes. 256 measured ~3x faster than 64 on few-KB docs; for corpora with
+# multi-MB blobs set spark.sql.execution.arrow.maxRecordsPerBatch to 64-128
+# through extra_conf so one batch never holds many giants (skew guard,
+# SURVEY.md §4)
+ARROW_MAX_RECORDS = 256
+
 
 def get_spark(
     app_name: str = "pbx-ds-ocr-server-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_max_records: int = 256,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -37,8 +43,13 @@ def get_spark(
         # ~4% win on the heavy dedup slots locally and avoids O(n log n)
         # sorts at scale. AQE may also rewrite SMJ→SHJ when every
         # post-shuffle partition is under 128 MB (conservative vs per-task
-        # memory; AQE skew-split still applies first). Both are plain SQL
-        # confs — override via extra_conf for memory-tight deployments.
+        # memory; AQE skew-split still applies first). preferSortMergeJoin
+        # =false also drives STATIC planning of every join: a side whose
+        # ESTIMATED size is under autoBroadcastJoinThreshold × shuffle
+        # partitions and 3× smaller than the other side is planned as a
+        # shuffled hash join before any runtime size is known. Both are
+        # plain SQL confs — override via extra_conf for memory-tight
+        # deployments.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
@@ -49,14 +60,11 @@ def get_spark(
         # unix_timestamp/F.window would otherwise interpret NTZ values in
         # the session zone and diverge from the oracle.
         .config("spark.sql.session.timeZone", "UTC")
-        # Arrow everywhere. Batch size trades python-roundtrip overhead
-        # against peak batch bytes: 256 measured ~3x faster than 64 on
-        # few-KB docs; tune DOWN to 64-128 for corpora with multi-MB blobs
-        # so one batch never holds many giants (skew guard, SURVEY.md §4)
+        # Arrow everywhere
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(arrow_max_records),
+            str(ARROW_MAX_RECORDS),
         )
         # keep scans splittable at ~128MB (tune per input-blob size at scale)
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

@@ -294,7 +294,7 @@ def run_extract_job(
         nonlocal docs_out
         b0 = time.time()
         # staging already co-located this bucket; no extra salting shuffle
-        result = extract(staged.filter(F.col("bucket") == bucket), cfg, salted=False)
+        result = extract(staged.filter(F.col("bucket") == bucket), cfg)
         obs = Observation()
         result.observe(
             obs,

@@ -10,6 +10,7 @@ from pbx_ds_ocr_server_spark.sources.writer import (
     read_lineage,
     read_output,
     run_extract_job,
+    stage_input,
 )
 
 N_BUCKETS = 4
@@ -242,6 +243,23 @@ def test_corrupt_staging_marker_raises_diagnostic(spark, corpus, tmp_path):
         f.write("1")  # torn prefix of a larger legacy count
     with pytest.raises(ValueError, match="corrupt marker"):
         run_extract_job(spark, corpus, out, run_id="r3", n_buckets=1)
+
+
+def test_staging_spreads_hot_host(spark, tmp_path):
+    """The staging write is where payloads are salted: 400 urls from ONE
+    host (the crawl-clustered worst case) in one input partition must land
+    in every bucket, none holding half of them."""
+    import os
+
+    rows = [(f"https://hot.example/{i}", b"<p>x</p>") for i in range(400)]
+    df = spark.createDataFrame(rows, "url string, html binary").coalesce(1)
+    staging = str(tmp_path / "staging")
+    stage_input(df, staging, 8)
+    dirs = sorted(d for d in os.listdir(staging) if d.startswith("bucket="))
+    assert dirs == sorted(f"bucket={k}" for k in range(8))
+    sizes = dict(spark.read.parquet(staging).groupBy("bucket").count().collect())
+    assert sorted(sizes) == list(range(8))  # every bucket dir holds rows
+    assert max(sizes.values()) < 400 * 0.5  # no single hot bucket
 
 
 def _sync_listeners(spark) -> None:

@@ -1,8 +1,7 @@
 """Physical-plan guarantees that matter at 100 TB (would regress silently):
 
-  * extract_pages: ZERO shuffles — payload bytes never cross the wire
-  * extract: exactly ONE shuffle — the url hash partitioning is planned once
-    and shared by the span-offset window and the assembly aggregation
+  * extract_pages and extract: ZERO shuffles — payload bytes never cross
+    the wire, and the fused assembly needs no url partitioning
   * the parquet scan reads only (url, html) — column pruning reaches storage
   * the assembly agg is partial+final (map-side combine before the shuffle)
   * a filter on a scannable column reaches the scan as a pushed filter
@@ -57,10 +56,6 @@ def test_assembly_agg_is_partial_final(parquet_corpus):
 def test_filter_pushdown_reaches_scan(parquet_corpus):
     df = parquet_corpus.filter(F.col("url").startswith("https://host1."))
     assert has_pushed_filters(df.select("url"))
-
-
-def test_salted_variant_adds_exactly_one_exchange(parquet_corpus):
-    assert count_exchanges(extract(parquet_corpus, salted=True)) == 1
 
 
 def test_jaccard_reuses_shingle_exchange(spark):
