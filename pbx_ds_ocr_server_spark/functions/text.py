@@ -67,8 +67,14 @@ def lang_votes(col: Column | str) -> dict[str, Column]:
 def lang_id(col: Column | str) -> Column:
     """argmax of stopword votes; ties break by LANGS order; zero votes → 'und'
     (undetermined, BCP-47 style)."""
-    v = lang_votes(col)
-    # explicit CASE chain (mirrored exactly in the DuckDB oracle SQL):
+    return _lang_argmax(lang_votes(col))
+
+
+def _lang_argmax(v: dict[str, Column]) -> Column:
+    """The tie-break CASE chain over the five vote columns ``v`` (keyed by
+    LANGS): the first language in LANGS order whose votes are positive
+    and >= every later language's wins; none → 'und'. Mirrored exactly in
+    the DuckDB oracle SQL."""
     chain = F.when(
         (v["en"] > 0)
         & (v["en"] >= F.greatest(v["de"], v["es"], v["fr"], v["zh"])),
@@ -165,23 +171,9 @@ def lang_id_table(df, id_col: str = "doc_id", text_col: str = "text"):
 
         return F.size(F.filter(F.col("lws"), pred))
 
-    c = {lang: vote(lang) for lang in LANGS}
-    chain = F.when(
-        (c["en"] > 0)
-        & (c["en"] >= F.greatest(c["de"], c["es"], c["fr"], c["zh"])),
-        F.lit("en"),
-    )
-    chain = chain.when(
-        (c["de"] > 0) & (c["de"] >= F.greatest(c["es"], c["fr"], c["zh"])),
-        F.lit("de"),
-    )
-    chain = chain.when(
-        (c["es"] > 0) & (c["es"] >= F.greatest(c["fr"], c["zh"])), F.lit("es")
-    )
-    chain = chain.when((c["fr"] > 0) & (c["fr"] >= c["zh"]), F.lit("fr"))
-    chain = chain.when(c["zh"] > 0, F.lit("zh"))
     return base.select(
-        F.col("id").alias(id_col), chain.otherwise(F.lit("und")).alias("lang_pred")
+        F.col("id").alias(id_col),
+        _lang_argmax({lang: vote(lang) for lang in LANGS}).alias("lang_pred"),
     )
 
 

@@ -17,6 +17,15 @@ exception. Page selection honors the reference's ``_parse_page_ranges`` order
 (``dsocr_model.py:106-141``) including its quirk that ``"5,1"`` processes page
 5 before page 1 — the merged text follows processing order.
 
+Each document is opened ONCE (``_OpenPdf``): one object scan, one page-tree
+walk, and at most one decryptor derivation (the file key's MD5 rounds and
+the /U check's 20 RC4 passes dominate an RC4 document — never re-derive
+it). The public helpers (``pdf_page_count``, ``pdf_title``,
+``pdf_decryptor``, ``extract_pdf[_detailed]``) each open, then read;
+:func:`read_pdf` reads everything the extract operator needs from one open
+— the analog of the reference's single lenient PyMuPDF open (its
+``app/services/dsocr_model.py:376-390``).
+
 Pure function of (payload bytes, config); zlib is the only dependency.
 """
 
@@ -24,6 +33,8 @@ from __future__ import annotations
 
 import re
 import zlib
+from functools import cached_property
+from typing import NamedTuple
 
 from pbx_ds_ocr_server_spark.config import DEFAULT_CONFIG, ExtractConfig
 from pbx_ds_ocr_server_spark.kernels.html_extract import PageResult, Span
@@ -153,9 +164,14 @@ def _expand_objstm(body: bytes, out: dict[int, bytes]) -> None:
     header = data[:first].split()
     if len(header) < 2 * n:
         return
-    pairs = [
-        (int(header[2 * i]), int(header[2 * i + 1])) for i in range(n)
-    ]
+    try:
+        pairs = [
+            (int(header[2 * i]), int(header[2 * i + 1])) for i in range(n)
+        ]
+    except ValueError:
+        # non-integer header: skip this stream like the malformed shapes
+        # above, never fail the whole document
+        return
     for i, (obj_num, off) in enumerate(pairs):
         start = first + off
         end = first + pairs[i + 1][1] if i + 1 < n else len(data)
@@ -193,21 +209,15 @@ def _page_object_ids(objects: dict[int, bytes]) -> list[int]:
     return page_ids
 
 
-def pdf_page_count(
-    payload: bytes, objects: dict[int, bytes] | None = None
-) -> int | None:
-    """None on parse failure (mirrors /root/reference/app/utils/pdf.py:12-23).
-    Pass pre-parsed ``objects`` to avoid re-scanning the payload (the extract
-    operator parses once and reuses for count + extraction)."""
+def pdf_page_count(payload: bytes) -> int | None:
+    """None on parse failure (mirrors the reference's
+    ``app/utils/pdf.py:12-23``)."""
     if not payload or not payload.startswith(b"%PDF-"):
         return None
     try:
-        pages = _page_object_ids(
-            _parse_objects(payload) if objects is None else objects
-        )
+        return _OpenPdf(payload).n_pages
     except Exception:
         return None
-    return len(pages) if pages else None
 
 
 def _ascii_hex_decode(data: bytes) -> bytes:
@@ -314,9 +324,7 @@ def _apply_filters(body: bytes, data: bytes) -> tuple[bytes, bool]:
     return data, True
 
 
-def _stream_data(
-    body: bytes, obj_id: int | None = None, decrypt=None
-) -> tuple[bytes, bool]:
+def _stream_data(body: bytes, obj_id: int, decrypt) -> tuple[bytes, bool]:
     """Decode one object's stream → (data, had_raw). ``had_raw`` is True
     when a non-empty raw stream existed, even if decoding failed — the
     signal that separates a genuinely blank page from a parser blind spot
@@ -328,7 +336,7 @@ def _stream_data(
         return b"", False
     data = sm.group(1)
     had_raw = bool(data)
-    if decrypt is not None and obj_id is not None:
+    if decrypt is not None:
         data = decrypt(obj_id, data)
     decoded, ok = _apply_filters(body, data)
     if not ok:
@@ -337,10 +345,7 @@ def _stream_data(
 
 
 def _content_stream(
-    objects: dict[int, bytes],
-    page_body: bytes,
-    page_oid: int | None = None,
-    decrypt=None,
+    objects: dict[int, bytes], page_body: bytes, page_oid: int, decrypt
 ) -> tuple[bytes, bool]:
     """Page body → (concatenated decoded content, had_raw_content).
 
@@ -496,7 +501,6 @@ def _text_items(
 
 _DO_RE = re.compile(rb"/([A-Za-z0-9]+)\s+Do\b")
 _INFO_REF_RE = re.compile(rb"/Info\s+(\d+)\s+\d+\s+R")
-_ENCRYPT_RE = re.compile(rb"/Encrypt\s+\d+\s+\d+\s+R")
 
 
 def _text_string(raw: bytes) -> str:
@@ -506,14 +510,6 @@ def _text_string(raw: bytes) -> str:
     if raw[:2] == b"\xfe\xff":
         return raw[2:].decode("utf-16-be", errors="replace")
     return raw.decode("utf-8", errors="replace")
-
-
-def pdf_is_encrypted(payload: bytes) -> bool:
-    """True when a trailer carries an /Encrypt reference. The reference
-    opens encrypted docs leniently via PyMuPDF (dsocr_model.py:376-390);
-    the analog here is :func:`pdf_decryptor` (empty-user-password RC4, the
-    dominant crawl case); anything it can't open stays a typed rejection."""
-    return bool(_ENCRYPT_RE.search(payload))
 
 
 # ------------------------------------------------------------- decryption
@@ -547,35 +543,48 @@ def _identity_decryptor():
     return _plain
 
 
-def _encrypt_dict_body(
-    payload: bytes, objects: dict[int, bytes] | None
-) -> bytes | None:
-    """The standard-security-handler /Encrypt dictionary body (last
-    trailer wins), or None when the document is unencrypted / uses a
-    non-standard filter."""
-    em = None
-    for m in _ENCRYPT_REF_RE.finditer(payload):
-        em = m  # last trailer wins (incremental updates append)
-    if em is None:
-        return None
-    num = int(em.group(1))
-    if objects is not None:
-        body = objects.get(num)
-    else:
-        # targeted regex scan for the ONE object instead of a full
-        # _parse_objects pass — pdf_title's locked-doc path calls this
-        # right after pdf_decryptor already paid for a parse (round-4
-        # review pass 3); last definition wins (incremental updates)
-        body = None
-        for om in re.finditer(
-            rb"(?<![0-9])%d\s+\d+\s+obj\b(.*?)endobj" % num,
-            payload,
-            re.DOTALL,
-        ):
-            body = om.group(1)
-    if body is None or not _STD_FILTER_RE.search(body):
-        return None
-    return body
+class _OpenPdf:
+    """One document, opened once: the parsed objects, the page ids and the
+    /Encrypt reference (last trailer wins — incremental updates append);
+    the standard /Encrypt dict and the decryptor are derived on first use
+    and never again. Every public helper opens, then reads."""
+
+    def __init__(self, payload: bytes):
+        self.payload = payload
+        self.objects = _parse_objects(payload)
+        self.page_ids = _page_object_ids(self.objects)
+        self.encrypt_ref: int | None = None
+        for m in _ENCRYPT_REF_RE.finditer(payload):
+            self.encrypt_ref = int(m.group(1))
+
+    @property
+    def n_pages(self) -> int | None:
+        """Page count; None when there is no page tree."""
+        return len(self.page_ids) or None
+
+    @property
+    def encrypted(self) -> bool:
+        """A trailer carries an /Encrypt reference."""
+        return self.encrypt_ref is not None
+
+    @cached_property
+    def encrypt_dict(self) -> bytes | None:
+        """The standard-security-handler /Encrypt dictionary body, or None
+        when the document is unencrypted / uses a non-standard filter."""
+        body = self.objects.get(self.encrypt_ref)
+        if body is None or not _STD_FILTER_RE.search(body):
+            return None
+        return body
+
+    @cached_property
+    def decrypt(self):
+        """:func:`pdf_decryptor`'s result, derived once per document."""
+        return _decryptor(self.payload, self.encrypt_dict)
+
+    @property
+    def locked(self) -> bool:
+        """Encrypted, and the empty user password does not open it."""
+        return self.encrypted and self.decrypt is None
 
 
 def _crypt_selector(body: bytes, key: bytes) -> bytes:
@@ -584,15 +593,12 @@ def _crypt_selector(body: bytes, key: bytes) -> bytes:
     return m_.group(1) if m_ else b"Identity"
 
 
-def pdf_strings_plaintext(
-    payload: bytes, objects: dict[int, bytes] | None = None
-) -> bool:
+def _strings_plaintext(body: bytes | None) -> bool:
     """True when the encrypted document's STRINGS are plaintext per its
     own /StrF selector (/Identity, or a /V 4-5 dict with no selector).
     Lets pdf_title keep a readable /Title even when the stream key cannot
     be derived (real user password) — strings and streams are encrypted
-    independently."""
-    body = _encrypt_dict_body(payload, objects)
+    independently. ``body`` is the /Encrypt dict (``_OpenPdf.encrypt_dict``)."""
     if body is None:
         return False
     vm = re.search(rb"/V\s+(-?\d+)", body)
@@ -603,7 +609,7 @@ def pdf_strings_plaintext(
     return _crypt_selector(body, b"StrF") == b"Identity"
 
 
-def pdf_decryptor(payload: bytes, objects: dict[int, bytes] | None = None):
+def pdf_decryptor(payload: bytes):
     """Empty-user-password decryptor, or None.
 
     Handles the dominant crawl cases: standard security handler with
@@ -621,7 +627,12 @@ def pdf_decryptor(payload: bytes, objects: dict[int, bytes] | None = None):
     Returns ``decrypt(obj_num, raw) -> raw``. Generation numbers are
     assumed 0 (the crawl norm; incremental-update gens would need the xref,
     which this scan-based parser deliberately skips)."""
-    body = _encrypt_dict_body(payload, objects)
+    return _OpenPdf(payload).decrypt
+
+
+def _decryptor(payload: bytes, body: bytes | None):
+    """:func:`pdf_decryptor` for the /Encrypt dict ``body`` (None → None);
+    ``payload`` supplies the trailer /ID."""
     if body is None:
         return None
 
@@ -665,7 +676,7 @@ def pdf_decryptor(payload: bytes, objects: dict[int, bytes] | None = None):
         if not stream_enc and not string_enc:
             # /StmF /Identity + refused /StrF: streams are plaintext and
             # extraction works through the raw-parse path; strings stay
-            # undecryptable (pdf_strings_plaintext says not-plaintext)
+            # undecryptable (_strings_plaintext says not-plaintext)
             return None
         # crypt-filter dispatch: /CFM must be read from the /StdCF entry
         # INSIDE the /CF dict (never whichever /CFM or /StdCF byte sequence
@@ -770,17 +781,6 @@ def pdf_decryptor(payload: bytes, objects: dict[int, bytes] | None = None):
         decrypt.for_strings = cipher if string_enc else _identity
         decrypt.strings_encrypted = string_enc
     return decrypt
-
-
-def pdf_decrypt_available(
-    payload: bytes, objects: dict[int, bytes] | None = None
-) -> bool:
-    """True when the document is encrypted AND the empty user password
-    opens it (so extraction can proceed instead of a typed rejection)."""
-    return (
-        pdf_is_encrypted(payload)
-        and pdf_decryptor(payload, objects) is not None
-    )
 
 
 # ---------------------------------------------------------- font resolution
@@ -1190,15 +1190,17 @@ def _inherited_resources(objects: dict[int, bytes]) -> bytes | None:
 def _page_fonts(
     objects: dict[int, bytes],
     page_body: bytes,
-    decrypt=None,
-    cache: dict[int, FontDecoder] | None = None,
-    inherited_fn=None,
+    decrypt,
+    cache: dict[int, FontDecoder],
+    inherited_fn,
 ) -> dict[bytes, FontDecoder]:
     """Font name → decoder for one page's governing /Resources (own entry
     or nearest /Parent-chain ancestor; ``inherited_fn()`` supplies the
-    lazily-resolved doc-level fallback for files with no usable chain)."""
+    lazily-resolved doc-level fallback for files with no usable chain).
+    ``cache`` maps font object ids to decoders across the document's
+    pages."""
     res = _resources_for_page(objects, page_body)
-    if res is None and inherited_fn is not None:
+    if res is None:
         res = inherited_fn()
     if not res:
         return {}
@@ -1213,19 +1215,14 @@ def _page_fonts(
         fbody = objects.get(oid)
         if fbody is None:
             continue
-        if cache is not None and oid in cache:
-            out[m.group(1)] = cache[oid]
-            continue
-        dec = _font_decoder(objects, fbody, decrypt)
-        if cache is not None:
-            cache[oid] = dec
+        dec = cache.get(oid)
+        if dec is None:
+            dec = cache[oid] = _font_decoder(objects, fbody, decrypt)
         out[m.group(1)] = dec
     return out
 
 
-def pdf_title(
-    payload: bytes, objects: dict[int, bytes] | None = None
-) -> str | None:
+def pdf_title(payload: bytes) -> str | None:
     """Document title from the trailer's Info dictionary.
 
     Resolves ``/Info N 0 R`` (the LAST occurrence wins — incremental
@@ -1237,24 +1234,24 @@ def pdf_title(
     entries use), UTF-16BE text strings (BOM-prefixed — the common shape
     for non-ASCII titles), and decrypts the title when the document is
     encrypted and the empty user password opens it (strings are encrypted
-    with the same per-object key as streams). Pass pre-parsed ``objects``
-    to avoid re-scanning the payload (the extract operator parses once)."""
-    encrypted = pdf_is_encrypted(payload)
-    decrypt = pdf_decryptor(payload, objects) if encrypted else None
-    if encrypted and decrypt is None:
+    with the same per-object key as streams)."""
+    return _title(_OpenPdf(payload))
+
+
+def _title(doc: _OpenPdf) -> str | None:
+    decrypt = doc.decrypt
+    if doc.encrypted and decrypt is None:
         # no stream decryptor (real user password / unsupported handler)
         # — but strings are encrypted INDEPENDENTLY of streams: when the
         # doc's own /StrF is /Identity the /Title is plaintext and stays
         # readable; otherwise it is ciphertext → typed absence, never
         # mojibake (round-4 review #2)
-        if not pdf_strings_plaintext(payload, objects):
+        if not _strings_plaintext(doc.encrypt_dict):
             return None
     # strings follow /StrF, not /StmF — a doc may encrypt streams but not
     # strings (or vice versa)
-    str_decrypt = getattr(decrypt, "for_strings", decrypt)
-    strings_encrypted = decrypt is not None and getattr(
-        decrypt, "strings_encrypted", True
-    )
+    str_decrypt = decrypt.for_strings if decrypt is not None else None
+    strings_encrypted = decrypt is not None and decrypt.strings_encrypted
 
     def _title_from(body: bytes, obj_num: int | None) -> str | None:
         raw = _dict_string(body, b"Title")
@@ -1270,11 +1267,12 @@ def pdf_title(
         t = " ".join(_text_string(raw).split())
         return t or None
 
+    payload = doc.payload
     info_obj: int | None = None
     for im in _INFO_REF_RE.finditer(payload):
         info_obj = int(im.group(1))
     if info_obj is not None:
-        body = (objects or {}).get(info_obj)
+        body = doc.objects.get(info_obj)
         if body is None:
             om = re.search(
                 rb"(?<![0-9])%d\s+\d+\s+obj\b(.*?)endobj" % info_obj,
@@ -1297,9 +1295,7 @@ def extract_pdf(
 
 
 def extract_pdf_detailed(
-    payload: bytes,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-    objects: dict[int, bytes] | None = None,
+    payload: bytes, cfg: ExtractConfig = DEFAULT_CONFIG
 ) -> list[tuple[PageResult, bool]]:
     """Like :func:`extract_pdf` but each page carries an ``unparsed`` flag:
     True when the page HAD non-empty content-stream bytes yet produced zero
@@ -1314,12 +1310,35 @@ def extract_pdf_detailed(
     password works (:func:`pdf_decryptor` — RC4-40/128 standard handler);
     otherwise streams stay undecodable and the caller's typed rejection
     applies."""
-    if objects is None:
-        objects = _parse_objects(payload)
-    decrypt = (
-        pdf_decryptor(payload, objects) if pdf_is_encrypted(payload) else None
-    )
-    page_ids = _page_object_ids(objects)
+    return _pages(_OpenPdf(payload), cfg)
+
+
+class PdfDocument(NamedTuple):
+    """What the extract operator reads of one PDF (:func:`read_pdf`)."""
+
+    n_pages: int | None  # None: no page tree
+    title: str | None
+    pages: list[tuple[PageResult, bool]]  # (page, unparsed), processing order
+    locked: bool  # encrypted, and the empty user password does not open it
+
+
+def read_pdf(payload: bytes, cfg: ExtractConfig = DEFAULT_CONFIG) -> PdfDocument:
+    """Open ``payload`` once and read its page count, pages, title and lock
+    state. Over ``cfg.max_pages`` (or with no page tree) nothing else is
+    read: pages empty, title None. Exceptions propagate — the caller types
+    them."""
+    doc = _OpenPdf(payload)
+    n = doc.n_pages
+    if n is None or n > cfg.max_pages:
+        return PdfDocument(n, None, [], False)
+    pages = _pages(doc, cfg)
+    return PdfDocument(n, _title(doc), pages, doc.locked)
+
+
+def _pages(doc: _OpenPdf, cfg: ExtractConfig) -> list[tuple[PageResult, bool]]:
+    objects = doc.objects
+    decrypt = doc.decrypt
+    page_ids = doc.page_ids
     total = len(page_ids)
     if total == 0:
         return []

@@ -15,6 +15,11 @@ Design notes for 100 TB scale:
     once and the plan has no shuffle: every page of a document comes from
     the same call in the same Arrow batch, and only finished document rows
     leave the pass.
+  * A PDF is opened once per document: ``_extract_one`` makes one kernel
+    call (``kernels.pdf_extract.read_pdf``) that returns facts — page
+    count, pages with their ``unparsed`` flags, title, ``locked`` — and
+    maps them to statuses here. The object scan, the page-tree walk and
+    the encryption key derivation each run once.
   * Rejected rows are never dropped: they surface as documents with a
     ``status`` (→ lineage), mirroring the reference's failed-job statuses
     (``/root/reference/app/schemas.py:10-16``).
@@ -39,18 +44,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pbx_ds_ocr_server_spark.config import DEFAULT_CONFIG, ExtractConfig
-from pbx_ds_ocr_server_spark.kernels import (
-    detect_content_type,
-    extract_html,
-    pdf_page_count,
-)
-from pbx_ds_ocr_server_spark.kernels.pdf_extract import (
-    _parse_objects,
-    extract_pdf_detailed,
-    pdf_decrypt_available,
-    pdf_is_encrypted,
-    pdf_title,
-)
+from pbx_ds_ocr_server_spark.kernels import detect_content_type, extract_html
+from pbx_ds_ocr_server_spark.kernels.pdf_extract import read_pdf
 from pbx_ds_ocr_server_spark.kernels.raster_meta import extract_raster_meta
 
 SPAN_STRUCT = (
@@ -115,26 +110,20 @@ def _extract_one(url: str, payload: bytes, cfg: ExtractConfig) -> list[dict]:
                      error=f"payload {len(payload)}b > {cfg.max_bytes}b")]
     try:
         if ctype == "pdf":
-            objects = _parse_objects(payload)  # parsed ONCE: count + extract
-            n = pdf_page_count(payload, objects)  # F2 (app/utils/pdf.py:12-23)
-            if n is None:
+            # ONE open: page count, title, pages, lock state
+            n, title, pages, locked = read_pdf(payload, cfg)
+            if n is None:  # F2 (app/utils/pdf.py:12-23)
                 return [dict(base, status=ST_REJ_UNPARSEABLE,
                              error="pdf page count failed")]
             if n > cfg.max_pages:  # app/config.py:63
                 return [dict(base, n_pages=n, status=ST_REJ_PAGES,
                              error=f"{n} pages > {cfg.max_pages}")]
-            pages = extract_pdf_detailed(payload, cfg, objects=objects)
-            title = pdf_title(payload, objects)
-            if (
-                pages
-                and all(not p.text for p, _u in pages)
-                and pdf_is_encrypted(payload)
-                and not pdf_decrypt_available(payload, objects)
-            ):
-                # undecryptable content streams (real user password, AES,
-                # crypt filters): typed rejection, not empty text. RC4
-                # owner-locked docs decrypt with the empty user password
-                # inside the kernel and never reach this branch.
+            if pages and locked and all(not p.text for p, _u in pages):
+                # undecryptable content streams (real user password,
+                # unsupported crypt filters): typed rejection, not empty
+                # text. Owner-locked RC4/AES docs decrypt with the empty
+                # user password inside the kernel and never reach this
+                # branch.
                 return [dict(base, n_pages=n, title=title,
                              status=ST_REJ_UNPARSEABLE,
                              error="pdf encrypted (empty-user-password"

@@ -140,54 +140,14 @@ def stage_input(
     The ``_STAGED`` marker records the bucket count; re-staging the same
     directory with a DIFFERENT ``n_buckets`` raises instead of silently
     reusing the old layout (a resume at a smaller n_buckets would otherwise
-    never extract buckets >= n_buckets yet mark the run complete). A marker
-    with no recorded count (runs staged before the count was recorded) is
-    NOT taken on the caller's word — the true count is derived from the
-    staged ``bucket=K`` directory layout itself, verified against the
-    request, and the marker is rewritten; mismatches still raise (trusting
-    the argument here would silently drop buckets >= n_buckets on resume —
-    the exact hazard the marker exists to prevent)."""
-    import warnings
-
+    never extract buckets >= n_buckets yet mark the run complete). The
+    marker is written with tmp + ``os.replace`` and always holds the count,
+    so a marker that is empty or not a number is corrupt and raises; so
+    does a count below the highest ``bucket=K`` dir (a torn write)."""
     marker = os.path.join(staging_dir, "_STAGED")
     if os.path.exists(marker):
         with open(marker, encoding="utf-8") as f:
             raw = f.read().strip()
-        if not raw:
-            # legacy marker: recover a LOWER BOUND on the count from the
-            # layout (max bucket id + 1; top buckets CAN be empty on small
-            # inputs). derived > requested proves a mismatch → raise
-            # BEFORE touching the marker; derived <= requested is
-            # consistent with the request (empty top buckets lose
-            # nothing), so record the REQUESTED count.
-            derived = (
-                max(
-                    (
-                        int(d.split("=", 1)[1])
-                        for d in os.listdir(staging_dir)
-                        if d.startswith("bucket=")
-                    ),
-                    default=-1,
-                )
-                + 1
-            )
-            if derived > n_buckets:
-                raise ValueError(
-                    f"staging at {staging_dir} has bucket dirs up to"
-                    f" {derived - 1} but n_buckets={n_buckets} was"
-                    " requested; use the original bucket count or re-stage"
-                    " into a fresh output_dir"
-                )
-            warnings.warn(
-                f"staging marker at {marker} records no bucket count"
-                f" (legacy run); layout shows ≥{derived} buckets, which is"
-                f" consistent with the requested n_buckets={n_buckets} —"
-                " recording it",
-                stacklevel=2,
-            )
-            with open(marker, "w", encoding="utf-8") as f:
-                f.write(str(n_buckets))
-            raw = str(n_buckets)
         if not raw.isdigit():
             raise ValueError(
                 f"staging marker at {marker} is corrupt ({raw!r}); delete"

@@ -110,59 +110,6 @@ def test_concurrent_buckets_complete_and_match(spark, corpus, tmp_path):
     assert {r.bucket for r in lin.collect()} == set(range(4))
 
 
-def test_legacy_empty_staging_marker_resumes_with_warning(spark, corpus, tmp_path):
-    import os
-    import warnings
-
-    out = str(tmp_path / "legacy")
-    run_extract_job(spark, corpus, out, run_id="r1", n_buckets=4, fail_after=1)
-    # simulate a staging dir written before the marker recorded a count
-    marker = os.path.join(out, "staging", "_STAGED")
-    open(marker, "w").close()
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        res = run_extract_job(spark, corpus, out, run_id="r2", n_buckets=4)
-    assert any("legacy" in str(x.message) for x in w)
-    assert len(res.buckets_done) == 3  # resumed, not re-staged
-
-
-def test_legacy_marker_tolerates_empty_top_buckets(spark, corpus, tmp_path):
-    """Layout-derived counts are a LOWER bound (top hash buckets can be
-    empty on small inputs): a legacy resume with the true original count
-    must not be bricked when bucket=N-1 happens to be missing (round-3
-    review finding)."""
-    import os
-    import shutil
-    import warnings
-
-    out = str(tmp_path / "legacy_gap")
-    run_extract_job(spark, corpus, out, run_id="r1", n_buckets=4, fail_after=1)
-    shutil.rmtree(os.path.join(out, "staging", "bucket=3"), ignore_errors=True)
-    open(os.path.join(out, "staging", "_STAGED"), "w").close()
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        res = run_extract_job(spark, corpus, out, run_id="r2", n_buckets=4)
-    assert any("legacy" in str(x.message) for x in w)
-    assert len(res.buckets_done) == 3  # resumed with the original count
-
-
-def test_legacy_marker_with_wrong_n_buckets_still_raises(spark, corpus, tmp_path):
-    """The legacy path derives the TRUE count from the bucket=K layout and
-    must NOT trust the caller's argument — resuming an 8-bucket staging
-    with n_buckets=4 would silently drop half the corpus (round-3 review
-    finding)."""
-    import os
-    import warnings
-
-    out = str(tmp_path / "legacy_bad")
-    run_extract_job(spark, corpus, out, run_id="r1", n_buckets=8, fail_after=1)
-    open(os.path.join(out, "staging", "_STAGED"), "w").close()
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        with pytest.raises(ValueError, match="n_buckets"):
-            run_extract_job(spark, corpus, out, run_id="r2", n_buckets=4)
-
-
 def test_write_table_parquet_and_iceberg_seam(spark, tmp_path):
     from pbx_ds_ocr_server_spark.sources.writer import write_table
 
@@ -235,10 +182,11 @@ def test_corrupt_staging_marker_raises_diagnostic(spark, corpus, tmp_path):
     out = str(tmp_path / "corrupt_marker")
     run_extract_job(spark, corpus, out, run_id="r1", n_buckets=4)
     marker = os.path.join(out, "staging", "_STAGED")
-    with open(marker, "w", encoding="utf-8") as f:
-        f.write("not-a-number")
-    with pytest.raises(ValueError, match="corrupt"):
-        run_extract_job(spark, corpus, out, run_id="r2", n_buckets=4)
+    for bad in ("not-a-number", ""):  # the writer never leaves either
+        with open(marker, "w", encoding="utf-8") as f:
+            f.write(bad)
+        with pytest.raises(ValueError, match="corrupt"):
+            run_extract_job(spark, corpus, out, run_id="r2", n_buckets=4)
     with open(marker, "w", encoding="utf-8") as f:
         f.write("1")  # torn prefix of a larger legacy count
     with pytest.raises(ValueError, match="corrupt marker"):

@@ -116,6 +116,26 @@ def test_objstm_objects_visible():
     assert extract_pdf(pdf)[0].text == "inside objstm"
 
 
+def test_malformed_objstm_header_skips_only_that_stream():
+    """An object stream whose header is not integer pairs is skipped; the
+    rest of the document still parses, and the helpers that open the
+    document (pdf_decryptor, pdf_title) stay total."""
+    from pbx_ds_ocr_server_spark.kernels.pdf_extract import (
+        pdf_decryptor,
+        pdf_title,
+    )
+
+    bad = b"x y 1 0 "
+    pdf = _one_page_pdf(b"BT /F1 12 Tf 72 700 Td (still here) Tj ET") + (
+        b"9 0 obj\n<< /Type /ObjStm /N 1 /First 4 /Length 8 >>\nstream\n"
+        + bad + b"\nendstream\nendobj\n"
+    )
+    assert pdf_page_count(pdf) == 1
+    assert extract_pdf(pdf)[0].text == "still here"
+    assert pdf_decryptor(pdf + b"trailer << /Encrypt 9 0 R >>") is None
+    assert pdf_title(pdf) is None
+
+
 def test_figure_span_from_xobject():
     pdf = _one_page_pdf(b"BT /F1 12 Tf 72 700 Td (text) Tj ET /Img1 Do")
     spans = extract_pdf(pdf)[0].spans
@@ -621,9 +641,7 @@ def test_aes_primitives_fips197_known_answer():
 
 
 def test_rc4_wrong_user_password_stays_undecryptable():
-    from pbx_ds_ocr_server_spark.kernels.pdf_extract import (
-        pdf_decrypt_available,
-    )
+    from pbx_ds_ocr_server_spark.kernels.pdf_extract import pdf_decryptor
 
     pdf = make_pdf(pdf_pages_for("secret words", 1), encrypt="rc4-128")
     # corrupt /U so the empty-user-password check must fail
@@ -633,9 +651,58 @@ def test_rc4_wrong_user_password_stays_undecryptable():
     u = m.group(1)
     flipped = (b"0" if u[:1] != b"0" else b"1") + u[1:]
     broken = pdf[: m.start(1)] + flipped + pdf[m.end(1):]
-    assert pdf_decrypt_available(pdf)
-    assert not pdf_decrypt_available(broken)
+    assert pdf_decryptor(pdf) is not None
+    assert pdf_decryptor(broken) is None
     assert [p.text for p in extract_pdf(broken)] == [""]
+
+
+def test_extract_one_opens_each_pdf_once(monkeypatch):
+    """One ``_extract_one`` call opens its PDF once: one page-tree walk,
+    and for an encrypted document one file-key derivation — whether the
+    empty user password opens it or not (the derivation is the costliest
+    step of an RC4 document; count, pages, title and the lock check all
+    read the same open)."""
+    import re
+
+    from pbx_ds_ocr_server_spark.config import DEFAULT_CONFIG
+    from pbx_ds_ocr_server_spark.kernels import pdf_extract
+    from pbx_ds_ocr_server_spark.operators.extract import _extract_one
+
+    calls = {"key": 0, "walk": 0}
+    key_fn = pdf_extract.empty_password_key
+    walk_fn = pdf_extract._page_object_ids
+
+    def counted_key(*a):
+        calls["key"] += 1
+        return key_fn(*a)
+
+    def counted_walk(*a):
+        calls["walk"] += 1
+        return walk_fn(*a)
+
+    monkeypatch.setattr(pdf_extract, "empty_password_key", counted_key)
+    monkeypatch.setattr(pdf_extract, "_page_object_ids", counted_walk)
+
+    pages = pdf_pages_for("secret words on two locked pages " * 4, 2)
+    rc4 = make_pdf(pages, title="Locked Title", encrypt="rc4-128")
+    m = re.search(rb"/U <([0-9a-f]+)>", rc4)
+    u = m.group(1)
+    flipped = (b"0" if u[:1] != b"0" else b"1") + u[1:]  # /U check fails
+    locked = rc4[: m.start(1)] + flipped + rc4[m.end(1):]
+
+    def run(pdf: bytes) -> list[dict]:
+        calls.update(key=0, walk=0)
+        return _extract_one("https://h.example/doc", pdf, DEFAULT_CONFIG)
+
+    rows = run(rc4)
+    assert [r["status"] for r in rows] == ["succeeded", "succeeded"]
+    assert rows[0]["title"] == "Locked Title"
+    assert calls == {"key": 1, "walk": 1}
+    rows = run(locked)
+    assert [r["status"] for r in rows] == ["rejected_unparseable"]
+    assert calls == {"key": 1, "walk": 1}
+    run(make_pdf(pages))
+    assert calls == {"key": 0, "walk": 1}
 
 
 def test_title_utf16_hex_and_encrypted():
@@ -906,15 +973,13 @@ def test_aesv2_key_length_pinned_regardless_of_length_entry_order():
     the regex finds first (round-3 review finding)."""
     import re
 
-    from pbx_ds_ocr_server_spark.kernels.pdf_extract import (
-        pdf_decrypt_available,
-    )
+    from pbx_ds_ocr_server_spark.kernels.pdf_extract import pdf_decryptor
 
     pdf = make_pdf(pdf_pages_for("aes body text", 1), encrypt="aes-128")
     # strip the top-level /Length 128 — the CF's /Length 16 remains
     stripped = re.sub(rb"/Length 128 ", b"", pdf, count=1)
     assert stripped != pdf
-    assert pdf_decrypt_available(stripped)
+    assert pdf_decryptor(stripped) is not None
     assert [p.text for p in extract_pdf(stripped)] == [
         p.text for p in extract_pdf(make_pdf(pdf_pages_for("aes body text", 1)))
     ]
