@@ -24,6 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pbx_ds_ocr_server_spark.caching import materialize
 from pbx_ds_ocr_server_spark.corpus import synthesize_corpus_df, wrapped_docs_df
 from pbx_ds_ocr_server_spark.functions.text import (
     EMAIL_RE,
@@ -1317,15 +1318,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # table snapshots per-label centroids at 6dp, and search ranks
         # lists driver-side by half-away-rounded cosine (nprobe=1) before
         # ADC-ranking the probed list against the global codebooks.
-        from pbx_ds_ocr_server_spark.caching import own_result
         from pbx_ds_ocr_server_spark.operators.pq import pq_build, pq_search
 
         emb = _emb(spark, sf)
         qvec = emb.filter(F.col("vec_id") == 0).first()["embedding"]
         # pq_build scans the corpus 1 (coarse) + m (Lloyd's) + 1 (encode)
-        # times and documents that it does NOT own caching — cache here,
-        # release via own_result once the k-row result is materialized
-        corpus = emb.filter(F.col("vec_id") != 0).cache()
+        # times and does not persist its input — checkpoint it once here
+        corpus = materialize(emb.filter(F.col("vec_id") != 0))
         index = pq_build(
             corpus,
             dims=64,
@@ -1335,11 +1334,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             fit_df=corpus.filter(F.col("vec_id") % 7 == 1),
             centroid_round_dp=5,
         )
-        return own_result(
-            pq_search(
-                index, [float(x) for x in qvec], k=5, nprobe=1, round_dp=5
-            ),
-            corpus,
+        return pq_search(
+            index, [float(x) for x in qvec], k=5, nprobe=1, round_dp=5
         )
 
     q["label_centroids"] = label_centroids_q
@@ -1425,21 +1421,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # without persistence the whole span-discovery pipeline (shingle
         # groupBy + dup join + window merge) is planned TWICE (differing
         # column pruning defeats ReusedExchange — measured 18 exchanges
-        # uncached vs 9). own_result materializes the joined output and
-        # unpersists the intermediate before returning (round 7 — no
-        # caller clearCache contract anymore).
-        from pbx_ds_ocr_server_spark.caching import own_result
-
-        cleaned = exact_substr_dedup(injected, k=8).cache()
+        # uncached vs 9)
+        cleaned = materialize(exact_substr_dedup(injected, k=8))
         chunks = chunk_documents(
             cleaned.select("doc_id", F.col("text_clean").alias("text")),
             window=64,
             stride=48,
         )
-        return own_result(
-            chunks.join(cleaned.select("doc_id", "n_removed"), "doc_id"),
-            cleaned,
-        )
+        return chunks.join(cleaned.select("doc_id", "n_removed"), "doc_id")
 
     q["exactsubstr_chunks"] = exactsubstr_chunks_q
 
@@ -1462,7 +1451,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pbx_ds_ocr_server_spark.functions.text import (
             _bucketed_token_frame,
         )
-        from pbx_ds_ocr_server_spark.caching import materialize
 
         base = materialize(
             _bucketed_token_frame(d, "doc_id", "text", 16)
@@ -1597,9 +1585,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         # fan the narrow frame out BEFORE scoring: the driver parquet is
         # single-row-group, so without this the token/quality/lang scoring
-        # that materializes the cached gate frame runs on 1-2 of 32 cores
+        # that materializes the gate frame runs on 1-2 of 32 cores
         d = ensure_min_partitions(_docs_u(spark, sf).select("doc_id", "text"))
-        filtered = (
+        # checkpoint the gate frame: the Gopher gate reads it twice (rule
+        # flags + keep-set semi join), so without persistence the
+        # token/quality/lang scoring runs twice
+        filtered = materialize(
             d.withColumn("n_tokens", token_count("text"))
             .withColumn("quality", quality_score("text"))
             .withColumn("lang_pred", lang_id("text"))
@@ -1609,13 +1600,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 & (F.col("quality") >= 0.5)
                 & (F.col("lang_pred") == "en")
             )
-            # the composed gates self-join back to this frame four times
-            # (gopher keep-set, decontamination anti-join, dedup keep-set);
-            # without persistence Spark re-runs token/quality/lang scoring
-            # on every scan. own_result below materializes the survivor
-            # ids and unpersists this frame before returning (round 7 —
-            # no caller clearCache contract anymore).
-            .cache()
         )
         # thresholds sized to the synthetic corpus (10-99 words/doc, no
         # symbols, all-alpha): words/stopword/dup/bigram rules each cut a
@@ -1627,9 +1611,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (measured: dedup_exact's wall was 2× decon's, which was 2×
         # gopher's). The frontiers are gate survivors — tiny relative to
         # the corpus — and the checkpointed blocks are freed by the
-        # ContextCleaner when the returned plan is GC'd (own_result doc).
-        from pbx_ds_ocr_server_spark.caching import materialize
-
+        # ContextCleaner when the returned plan is GC'd (caching doc).
         gophered = materialize(gopher_filter(
             filtered,
             min_words=25,
@@ -1644,12 +1626,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "text"
         )
         decon = materialize(decontaminate(gophered, eval_df, ngram=8))
-        from pbx_ds_ocr_server_spark.caching import own_result
-
-        return own_result(
-            dedup_exact(decon, "doc_id", "text").select("doc_id"),
-            filtered,
-        )
+        return dedup_exact(decon, "doc_id", "text").select("doc_id")
 
     q["corpus_curation"] = corpus_curation
     return q

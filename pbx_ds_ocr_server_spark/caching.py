@@ -1,60 +1,20 @@
-"""Cache ownership for operators that persist intermediates internally.
+"""The one way the program keeps an intermediate.
 
-Three query paths cache an intermediate frame because several downstream
-branches re-scan it (`corpus_curation`'s gated frame, `exactsubstr_chunks`'
-span-subtracted frame, `ivf_pq_topk`'s inverted list). Through round 6 they
-returned LAZY results, so they could not unpersist — the cache outlived the
-call and repeat callers had to ``spark.catalog.clearCache()`` between
-invocations (a contract three docstrings repeated; the round-6 verdict
-flagged the pattern as a footgun).
+Each intermediate that several downstream branches read is checkpointed
+once, eagerly, by :func:`materialize`, and everything built on it stays
+lazy. The returned frame owns its blocks: Spark's ContextCleaner frees
+them when the frame (and every plan built on it) is garbage-collected
+driver-side. There is no ``unpersist`` contract and nothing is left in the
+CacheManager, so a repeat caller never has to ``clearCache``.
 
-:func:`own_result` removes the contract: materialize the result via
-``localCheckpoint(eager=True)`` — which truncates lineage, so the returned
-frame re-reads its OWN blocks instead of re-deriving from the cached
-intermediate — then unpersist the intermediates immediately. The
-checkpoint's blocks are owned by the returned frame and freed by Spark's
-ContextCleaner when it is garbage-collected driver-side: ownership follows
-the object, no session-global cleanup needed.
-
-Scale note: this is the right shape when the result is the SMALL end of
-the pipeline (top-k lists, per-doc summaries, gate survivors — everything
-the driver gate consumes with one ``toPandas``). A production pipeline
-whose result is corpus-sized ends in a SINK write instead (`sources/
-writer`), after which the job runner unpersists — materializing 100 TB
-into block storage is not a cleanup strategy.
-
-:func:`materialize` is the plain eager checkpoint for a small intermediate
-that several branches re-scan, with nothing to unpersist.
+Scale note: checkpoint only SMALL intermediates (gate survivors, candidate
+pairs, one inverted list). A corpus-sized result ends in a sink write
+instead (``sources/writer``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def own_result(result: DataFrame, *intermediates: DataFrame) -> DataFrame:
-    """Eagerly materialize ``result`` (lineage-truncating local checkpoint),
-    then ``unpersist`` every frame in ``intermediates``. Returns the
-    checkpointed frame — same rows, same schema, storage owned by the
-    returned object (ContextCleaner frees its blocks on GC).
-
-    ``localCheckpoint`` rather than ``checkpoint``: no checkpoint dir
-    required, blocks live in executor storage (MEMORY_AND_DISK). The
-    non-fault-tolerant caveat (blocks die with an executor) is acceptable
-    for a result that is about to be consumed; jobs needing re-computable
-    results should write to a sink instead.
-
-    The unpersist runs in a ``finally``: if the eager checkpoint job
-    fails (executor OOM, task abort), the intermediates must still be
-    released — the caller-side clearCache contract is gone, so a retry
-    loop would otherwise accumulate one orphaned cached frame per failed
-    attempt with no owner left to free them."""
-    try:
-        out = result.localCheckpoint(eager=True)
-    finally:
-        for df in intermediates:
-            df.unpersist()
-    return out
 
 
 def materialize(df: DataFrame) -> DataFrame:

@@ -10,6 +10,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+# full.md page/block join separator (reference: pipeline.py:205) — part of
+# the byte-identity output spec, so a constant rather than a config field
+PAGE_SEPARATOR = "\n\n"
+
 
 @dataclass(frozen=True)
 class ExtractConfig:
@@ -21,10 +25,6 @@ class ExtractConfig:
     # --- bounded-work guards (analog of image clamp, dsocr_model.py:33-55) ---
     max_block_chars: int = 1 << 20      # cap text accumulated per block
     max_blocks_per_doc: int = 50_000    # cap DOM blocks scanned per document
-    # --- boilerplate scoring thresholds (our frozen spec, SURVEY.md §7 risk 2) ---
-    link_density_max: float = 0.5       # blocks above this are boilerplate
-    # --- merge rule constants (reference: pipeline.py:205) ---
-    page_separator: str = "\n\n"        # full.md join separator (byte-identity!)
     # --- output rendering (reference full.md is markdown: pipeline.py:189-205
     #     merges model markdown; 'markdown' renders the kernel's span
     #     classifications as ## heading / - list_item / fenced pre) ---

@@ -28,8 +28,17 @@ import html as _html
 import re
 from dataclasses import dataclass, field
 
-from pbx_ds_ocr_server_spark.config import DEFAULT_CONFIG, ExtractConfig
+from pbx_ds_ocr_server_spark.config import (
+    DEFAULT_CONFIG,
+    PAGE_SEPARATOR,
+    ExtractConfig,
+)
 from pbx_ds_ocr_server_spark.kernels.charset import sniff_decode
+
+# Boilerplate scoring threshold (our frozen spec, SURVEY.md §7 risk 2): a
+# block whose link text exceeds this share of its non-whitespace text is
+# dropped.
+LINK_DENSITY_MAX = 0.5
 
 # Tags whose open OR close terminates the current text block.
 # Everything not listed in _INLINE below is treated as a block boundary —
@@ -232,7 +241,7 @@ def extract_html(payload: bytes, cfg: ExtractConfig = DEFAULT_CONFIG) -> PageRes
                     )
                     keep = (
                         total_nonws > 0
-                        and (link_nonws / total_nonws) <= cfg.link_density_max
+                        and (link_nonws / total_nonws) <= LINK_DENSITY_MAX
                     )
                 else:
                     keep = True
@@ -317,7 +326,7 @@ def assemble_page(
     parts: list[str] = []
     spans: list[Span] = []
     byte_off = 0
-    sep_bytes = len(cfg.page_separator.encode("utf-8"))
+    sep_bytes = len(PAGE_SEPARATOR.encode("utf-8"))
     markdown = cfg.mode == "markdown"
     for kind, tag, btext in blocks:
         if markdown:
@@ -339,7 +348,7 @@ def assemble_page(
         byte_off += blen
     return PageResult(
         page_index=1,
-        text=cfg.page_separator.join(parts),
+        text=PAGE_SEPARATOR.join(parts),
         spans=spans,
         title=title,
     )

@@ -28,6 +28,7 @@ from html.parser import HTMLParser
 from pbx_ds_ocr_server_spark.config import DEFAULT_CONFIG, ExtractConfig
 from pbx_ds_ocr_server_spark.kernels.charset import sniff_decode
 from pbx_ds_ocr_server_spark.kernels.html_extract import (
+    LINK_DENSITY_MAX,
     _BOILER,
     _INLINE,
     _RAWTEXT,
@@ -67,7 +68,7 @@ class _StrictExtractor(HTMLParser):
                 if self.link_texts:
                     total = len("".join(self.pieces).translate(_WS_DELETE))
                     link = len("".join(self.link_texts).translate(_WS_DELETE))
-                    keep = total > 0 and (link / total) <= self.cfg.link_density_max
+                    keep = total > 0 and (link / total) <= LINK_DENSITY_MAX
                 else:
                     keep = True
                 if keep:

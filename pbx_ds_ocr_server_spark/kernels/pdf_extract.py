@@ -36,7 +36,11 @@ import zlib
 from functools import cached_property
 from typing import NamedTuple
 
-from pbx_ds_ocr_server_spark.config import DEFAULT_CONFIG, ExtractConfig
+from pbx_ds_ocr_server_spark.config import (
+    DEFAULT_CONFIG,
+    PAGE_SEPARATOR,
+    ExtractConfig,
+)
 from pbx_ds_ocr_server_spark.kernels.html_extract import PageResult, Span
 from pbx_ds_ocr_server_spark.kernels.page_ranges import parse_page_ranges
 from pbx_ds_ocr_server_spark.kernels.pdf_crypt import (
@@ -1344,7 +1348,7 @@ def _pages(doc: _OpenPdf, cfg: ExtractConfig) -> list[tuple[PageResult, bool]]:
         return []
     wanted = parse_page_ranges(cfg.page_ranges, total)
     results: list[tuple[PageResult, bool]] = []
-    sep_bytes = len(cfg.page_separator.encode("utf-8"))
+    sep_bytes = len(PAGE_SEPARATOR.encode("utf-8"))
     font_cache: dict[int, FontDecoder] = {}
     inherited_cell: list = []  # lazily-resolved doc-level /Resources
 
@@ -1398,7 +1402,7 @@ def _pages(doc: _OpenPdf, cfg: ExtractConfig) -> list[tuple[PageResult, bool]]:
             (
                 PageResult(
                     page_index=page_index,
-                    text=cfg.page_separator.join(parts),
+                    text=PAGE_SEPARATOR.join(parts),
                     spans=spans,
                 ),
                 (had_raw and not parts) or lost,

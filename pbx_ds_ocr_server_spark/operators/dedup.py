@@ -262,7 +262,23 @@ def _pair_estimates(sigs: DataFrame, cand: DataFrame, k: int) -> DataFrame:
     """(a, b) candidate pairs + per-id signatures → (a, b, est_jaccard):
     matching signature components / k, the classic unbiased estimator
     (P[min-hash agreement] = true Jaccard per component). Two equi-joins
-    on id against the (tiny) signature relation — never touches texts."""
+    on id against the (tiny) signature relation — never touches texts.
+
+    Callers pass ``cand = lsh_candidate_pairs(sigs, bands)``: the slim
+    band self-join shuffles only (id, band_id, key) at ~50 B/row, and the
+    signatures are re-attached here. Round-9 rewrite (the round-8 ×4-scale
+    run measured the cost): the previous form CARRIED all 2k signature hex
+    columns through the band self-join — ~4 KB/row over a
+    |docs|×bands×2 relation at the k=64 production point, 57% of the whole
+    estimate-tier wall at ×4 scale. The signature AGGREGATION's exchange
+    (hashpartitioning(id) under the groupBy) is planned identically in all
+    its consumers, so AQE reuses ONE materialization of the expensive
+    shingle-explode map side (ReusedExchange — pinned by
+    tests/test_plans.py::test_estimate_tier_reuses_signature_exchange);
+    only the cheap final-merge aggregation re-runs per consumer. The
+    per-side joins need no extra shuffle of the signature relation either:
+    its groupBy partitioning (id) already satisfies the join keys (a / b),
+    so only the (small) candidate-pair relation is re-shuffled."""
     xa = sigs.select(
         F.col("id").alias("a"),
         *[F.col(f"s{i}").alias(f"xa{i}") for i in range(k)],
@@ -283,36 +299,6 @@ def _pair_estimates(sigs: DataFrame, cand: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _candidate_pair_estimates(
-    sig: DataFrame,
-    bands: tuple[tuple[str, ...], ...],
-    k: int,
-    max_bucket_df: int | None = None,
-) -> DataFrame:
-    """(a, b, est_jaccard) for LSH candidate pairs: slim banded self-join
-    for the candidates, then the per-side signature joins of
-    :func:`_pair_estimates`.
-
-    Round-9 rewrite (the round-8 ×4-scale run measured the cost): the
-    previous form CARRIED all 2k signature hex columns through the band
-    self-join — ~4 KB/row over a |docs|×bands×2 relation at the k=64
-    production point, 57% of the whole estimate-tier wall at ×4 scale.
-    This form shuffles the band join at ~50 B/row (id, band_id, key) and
-    re-attaches signatures by joining the candidate pairs back to the
-    signature relation. The signature AGGREGATION's exchange
-    (hashpartitioning(id) under the groupBy) is planned identically in all
-    its consumers, so AQE reuses ONE materialization of the expensive
-    shingle-explode map side (ReusedExchange — pinned by
-    tests/test_plans.py::test_estimate_tier_reuses_signature_exchange);
-    only the cheap final-merge aggregation re-runs per consumer. The
-    per-side joins need no extra shuffle of the signature relation either:
-    its groupBy partitioning (id) already satisfies the join keys (a / b),
-    so only the (small) candidate-pair relation is re-shuffled. Values are
-    identical to the fused form (same estimator, same rounding)."""
-    cand = lsh_candidate_pairs(sig, bands=bands, max_bucket_df=max_bucket_df)
-    return _pair_estimates(sig, cand, k)
-
-
 def minhash_jaccard_estimate(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -327,7 +313,9 @@ def minhash_jaccard_estimate(
     estimate can't decide — the payload texts are never touched here.
     → (a, b, est_jaccard)."""
     sigs = minhash_signatures(df, id_col, text_col, k=k)
-    return _candidate_pair_estimates(sigs, banding(k, num_bands), k)
+    return _pair_estimates(
+        sigs, lsh_candidate_pairs(sigs, bands=banding(k, num_bands)), k
+    )
 
 
 def paragraph_dedup(
@@ -666,9 +654,9 @@ def dedup_near(
         # all re-scan this frontier — without the checkpoint each consumer
         # re-executes the band-join/estimate stages (the heavy exchanges
         # below them are AQE-reused, but the join stages are not; round 9)
-        est = materialize(
-            _candidate_pair_estimates(sigs, bands, num_hashes)
-        )
+        est = materialize(_pair_estimates(
+            sigs, lsh_candidate_pairs(sigs, bands=bands), num_hashes
+        ))
         accepted = est.filter(F.col("est_jaccard") >= hi).select("a", "b")
         cand = est.filter(
             (F.col("est_jaccard") >= lo) & (F.col("est_jaccard") < hi)

@@ -43,7 +43,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pbx_ds_ocr_server_spark.config import DEFAULT_CONFIG, ExtractConfig
+from pbx_ds_ocr_server_spark.config import (
+    DEFAULT_CONFIG,
+    PAGE_SEPARATOR,
+    ExtractConfig,
+)
 from pbx_ds_ocr_server_spark.kernels import detect_content_type, extract_html
 from pbx_ds_ocr_server_spark.kernels.pdf_extract import read_pdf
 from pbx_ds_ocr_server_spark.kernels.raster_meta import extract_raster_meta
@@ -81,6 +85,13 @@ ST_FAILED = "failed"
 ST_REJ_SIZE = "rejected_size"
 ST_REJ_PAGES = "rejected_pages"
 ST_REJ_UNPARSEABLE = "rejected_unparseable"
+
+# doc-status tie-break among success tiers: the BEST page wins; rejections
+# and failures (rank -1) dominate. The one source of both assemblies' rule
+# (assemble_documents' JVM aggregation and the fused _assemble_one).
+_STATUS_RANK = {ST_OK: 0, ST_PARTIAL: 1, ST_EMPTY: 2, ST_NOOP: 3}
+
+_SEP_B = len(PAGE_SEPARATOR.encode("utf-8"))
 
 
 def _span_dicts(spans) -> list[dict]:
@@ -215,9 +226,7 @@ def extract_pages(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFra
     )
 
 
-def assemble_documents(
-    pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
-) -> DataFrame:
+def assemble_documents(pages: DataFrame) -> DataFrame:
     """Page rows → one row per url (M1/M2, SURVEY.md §2.5).
 
     Text merge follows the reference's full.md rule exactly
@@ -226,8 +235,6 @@ def assemble_documents(
     offsets are re-based from page-local to document byte offsets with a
     window (cumulative page bytes + separator bytes).
     """
-    sep = cfg.page_separator
-    sep_b = len(sep.encode("utf-8"))
     nonblank = F.trim(F.col("page_text")) != ""
     w = (
         Window.partitionBy("url")
@@ -238,7 +245,7 @@ def assemble_documents(
         "base_off",
         F.coalesce(
             F.sum(
-                F.when(nonblank, F.octet_length("page_text") + F.lit(sep_b))
+                F.when(nonblank, F.octet_length("page_text") + F.lit(_SEP_B))
                 .otherwise(F.lit(0))
             ).over(w),
             F.lit(0),
@@ -261,13 +268,10 @@ def assemble_documents(
     # text — beats 'empty'), while rejections/failures dominate everything.
     # A plain string min() would sort 'succeeded_empty' before
     # 'succeeded_partial' and mislabel text-carrying docs as empty.
-    status_rank = (
-        F.when(F.col("status") == ST_OK, 0)
-        .when(F.col("status") == ST_PARTIAL, 1)
-        .when(F.col("status") == ST_EMPTY, 2)
-        .when(F.col("status") == ST_NOOP, 3)
-        .otherwise(-1)  # rejected_* / failed dominate
-    )
+    status_rank = F  # F.when opens the chain, Column.when extends it
+    for status, rank in _STATUS_RANK.items():
+        status_rank = status_rank.when(F.col("status") == status, rank)
+    status_rank = status_rank.otherwise(-1)  # rejected_* / failed dominate
     agg = rebased.groupBy("url").agg(
         F.array_sort(
             F.collect_list(
@@ -289,9 +293,9 @@ def assemble_documents(
     ).withColumn("status", F.col("st.s")).drop("st")
     return agg.select(
         "url",
-        F.concat_ws(sep, F.expr("transform(parts, p -> p.page_text)")).alias(
-            "text"
-        ),
+        F.concat_ws(
+            PAGE_SEPARATOR, F.expr("transform(parts, p -> p.page_text)")
+        ).alias("text"),
         F.expr("flatten(transform(parts, p -> p.doc_spans))").alias("spans"),
         "n_pages",
         "title",
@@ -301,9 +305,7 @@ def assemble_documents(
     )
 
 
-def assemble_layout_json(
-    pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
-) -> DataFrame:
+def assemble_layout_json(pages: DataFrame) -> DataFrame:
     """Page rows → (url, layout_json) in the reference's layout.json shape:
     ``{"pages": [{"page_index": N, "res": {...}, "markdown": {...}}]}``
     accumulated in processing order
@@ -365,13 +367,7 @@ def keep_latest_snapshot(df: DataFrame, ts_col: str = "warc_ts") -> DataFrame:
     )
 
 
-# doc-status tie-break among success tiers (see assemble_documents): the
-# BEST page wins; rejections/failures (rank -1) dominate. Shared by the JVM
-# aggregation and the fused Python assembly below — keep in sync.
-_STATUS_RANK = {ST_OK: 0, ST_PARTIAL: 1, ST_EMPTY: 2, ST_NOOP: 3}
-
-
-def _assemble_one(rows: list[dict], sep: str, sep_b: int) -> dict:
+def _assemble_one(rows: list[dict]) -> dict:
     """Python mirror of :func:`assemble_documents` for the page rows of ONE
     document (they are produced together by ``_extract_one``, so no shuffle
     is needed to co-locate them). Must stay semantically identical to the
@@ -402,7 +398,7 @@ def _assemble_one(rows: list[dict], sep: str, sep_b: int) -> dict:
             spans.append(
                 dict(s, start=s["start"] + base_off, end=s["end"] + base_off)
             )
-        base_off += len(pt.encode("utf-8")) + sep_b
+        base_off += len(pt.encode("utf-8")) + _SEP_B
     titles = [r["title"] for r in rows if r["title"] is not None]
     errors = [r["error"] for r in rows if r["error"] is not None]
     status = min(
@@ -410,7 +406,7 @@ def _assemble_one(rows: list[dict], sep: str, sep_b: int) -> dict:
     )[1]
     return {
         "url": rows[0]["url"],
-        "text": sep.join(parts),
+        "text": PAGE_SEPARATOR.join(parts),
         "spans": spans,
         "n_pages": max(r["n_pages"] for r in rows),
         "title": max(titles) if titles else None,
@@ -439,11 +435,9 @@ def extract(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     Byte-identity with the JVM assembly of the page-level API
     (``extract_pages`` → ``assemble_documents``) is pinned by
     tests/test_extract_e2e.py::test_fused_extract_matches_page_assembly."""
-    sep = cfg.page_separator
-    sep_b = len(sep.encode("utf-8"))
     return _map_payloads(
         df,
-        lambda url, html: [_assemble_one(_extract_one(url, html, cfg), sep, sep_b)],
+        lambda url, html: [_assemble_one(_extract_one(url, html, cfg))],
         DOC_COLS,
         DOCS_SCHEMA,
     )

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pbx_ds_ocr_server_spark.caching import materialize
 from pbx_ds_ocr_server_spark.operators.kmeans import kmeans_fit
 from pbx_ds_ocr_server_spark.operators.similarity import as_double_array
 
@@ -196,11 +197,10 @@ def ivf_pq_topk(
     scale the fit is a one-off build step; the query path is the cheap
     part being demonstrated.
 
-    The selected list is ``.cache()``d internally (the per-subspace
-    Lloyd's jobs would otherwise rescan the source ~10×); the k-row result
-    is materialized via :func:`caching.own_result`, which unpersists the
-    list before returning — no caller-side cleanup contract (round 7;
-    previously repeat callers had to clearCache between invocations)."""
+    The selected list is checkpointed once by :func:`caching.materialize`
+    (the per-subspace Lloyd's jobs would otherwise rescan the source
+    ~10×); the returned k-row result stays lazy and owns those blocks, so
+    callers have nothing to clean up."""
     from pbx_ds_ocr_server_spark.operators.similarity import ivf_best_label
 
     best = ivf_best_label(
@@ -209,9 +209,9 @@ def ivf_pq_topk(
     )
     # ONE inverted list (small by construction) feeds several driver-side
     # jobs: the shared init collect, each subspace's Lloyd iteration aggs,
-    # the encode and the final ranking — cache it or every job rescans the
-    # source
-    cand = df.filter(F.col(label_col) == best).cache()
+    # the encode and the final ranking — checkpoint it or every job
+    # rescans the source
+    cand = materialize(df.filter(F.col(label_col) == best))
     codebooks = pq_fit(
         cand,
         dims=len(query_vec),
@@ -224,12 +224,7 @@ def ivf_pq_topk(
     )
     dt = adc_tables(query_vec, codebooks, round_dp=centroid_round_dp)
     codes = pq_encode(cand, codebooks, id_col=id_col, vec_col=vec_col)
-    from pbx_ds_ocr_server_spark.caching import own_result
-
-    return own_result(
-        pq_adc_topk(codes, dt, k=k, id_col=id_col, round_dp=round_dp),
-        cand,
-    )
+    return pq_adc_topk(codes, dt, k=k, id_col=id_col, round_dp=round_dp)
 
 
 # --- production IVFADC shape (round 7): build once, search many ---
@@ -291,8 +286,8 @@ def pq_build(
 
     The input is scanned once for the coarse table, m times for the
     per-subspace Lloyd's aggregates, and once for the encode — callers
-    looping over a non-materialized ``df`` should ``.cache()`` it first;
-    this function does not take ownership of caching."""
+    passing a non-materialized ``df`` should :func:`caching.materialize`
+    it first; this function does not persist its input."""
     from pbx_ds_ocr_server_spark.operators.similarity import (
         label_centroid_vectors,
     )

@@ -1,43 +1,45 @@
-"""Cache ownership (round 7): internally-caching query paths unpersist
-their intermediates before returning — repeat invocations must not
-accumulate persistent RDDs (the former caller-must-clearCache contract)."""
+"""One way to keep an intermediate: ``caching.materialize`` checkpoints it
+eagerly and the returned frame owns its blocks — repeat invocations must
+not accumulate persistent RDDs, and nothing is left to unpersist."""
+
+import ast
+from pathlib import Path
 
 import pytest
-from pyspark.sql import functions as F
 
-from pbx_ds_ocr_server_spark.caching import own_result
+import pbx_ds_ocr_server_spark
 
 SF_DIR = "/root/testdata/sf0.001"
+
+_PERSIST_CALLS = {"cache", "persist", "unpersist", "localCheckpoint", "checkpoint"}
 
 
 def _n_persistent(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
-def test_own_result_rows_and_unpersist(spark):
-    base = spark.range(100).withColumn("v", F.col("id") * 2).cache()
-    derived = base.groupBy((F.col("id") % 10).alias("g")).agg(
-        F.sum("v").alias("s")
-    )
-    before = _n_persistent(spark)
-    out = own_result(derived, base)
-    # the intermediate cache is gone the moment own_result returns …
-    assert base.storageLevel.useMemory is False
-    # … and the result survives it, because lineage was truncated
-    rows = {r.g: r.s for r in out.collect()}
-    assert rows == {g: sum(2 * i for i in range(g, 100, 10)) for g in range(10)}
-    assert out.schema == derived.schema
-    # net persistent-RDD growth is at most the one checkpoint own_result
-    # created (ContextCleaner frees it when `out` is GC'd)
-    assert _n_persistent(spark) <= before + 1
+def test_program_persists_only_through_materialize():
+    pkg = Path(pbx_ds_ocr_server_spark.__file__).parent
+    paths = [p for p in pkg.rglob("*.py") if p.name != "caching.py"]
+    paths.append(pkg.parent / "__spark_entry__.py")
+    found = [
+        f"{path.relative_to(pkg.parent)}:{node.lineno} .{node.func.attr}()"
+        for path in paths
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in _PERSIST_CALLS
+    ]
+    assert found == []
 
 
-@pytest.mark.parametrize("name", ["corpus_curation", "exactsubstr_chunks"])
+@pytest.mark.parametrize(
+    "name", ["corpus_curation", "exactsubstr_chunks", "ann_ivf_pq_top5"]
+)
 def test_slot_repeat_invocation_does_not_leak_cache(spark, name):
-    """The driver-gate slots that cache internally: three back-to-back
-    invocations (results dropped between them) may not grow the persistent
-    set by their intermediates — before round 7 each call leaked one
-    InMemoryRelation until someone clearCache'd."""
+    """The driver-gate slots that checkpoint intermediates: three
+    back-to-back invocations (results dropped between them) may not grow
+    the persistent set beyond the checkpoints each call owns."""
     import __spark_entry__ as entry
 
     q = entry.queries()[name]
@@ -47,14 +49,14 @@ def test_slot_repeat_invocation_does_not_leak_cache(spark, name):
         res.count()
         del res
         counts.append(_n_persistent(spark))
-    # intermediates are unpersisted inside the call, so the persistent set
-    # can only hold GC-owned checkpoints awaiting the ContextCleaner —
-    # which the NEXT call's sweep may or may not have collected yet. Since
-    # round 9 corpus_curation owns up to THREE checkpoints per call (the
-    # gopher/decon frontier checkpoints + the own_result checkpoint), so
-    # worst-case transient growth is 3/call; a REAL leak (an intermediate
-    # cache that is never unpersisted) adds a 4th per call and trips the
-    # bound. exactsubstr_chunks still owns 1/call.
+    # the persistent set can only hold GC-owned checkpoints awaiting the
+    # ContextCleaner — which the NEXT call's sweep may or may not have
+    # collected yet. corpus_curation owns THREE checkpoints per call (the
+    # gate frame and the gopher/decon frontiers), so worst-case transient
+    # growth is 3/call; a REAL leak (a cache that is never released) adds
+    # a 4th per call and trips the bound. exactsubstr_chunks (the
+    # span-subtracted frame) and ann_ivf_pq_top5 (the encoded corpus) own
+    # 1/call.
     limit = 6 if name == "corpus_curation" else 2
     assert counts[2] - counts[0] <= limit, counts
 
@@ -78,20 +80,3 @@ def test_ivf_pq_topk_repeat_invocation_does_not_leak_cache(spark):
         del out
         counts.append(_n_persistent(spark))
     assert counts[2] - counts[0] <= 2, counts
-
-
-def test_own_result_unpersists_even_when_materialization_fails(spark):
-    """Eighth-review fix: the unpersist runs in a finally — a failed
-    checkpoint job (executor OOM, task abort) must not orphan the cached
-    intermediates now that no caller-side clearCache contract exists."""
-    base = spark.range(50).withColumn("v", F.col("id") * 3).cache()
-    base.count()
-
-    @F.udf("long")
-    def boom(v):
-        raise RuntimeError("injected task failure")
-
-    failing = base.select(boom(F.col("v")).alias("x"))
-    with pytest.raises(Exception):
-        own_result(failing, base)
-    assert base.storageLevel.useMemory is False

@@ -534,29 +534,6 @@ def test_decontaminate_ignores_blank_rows(spark):
     assert kept == {1, 2, 3}
 
 
-def test_fused_candidate_estimates_match_two_step_form(spark):
-    """The fused band-self-join estimator (_candidate_pair_estimates) must
-    produce EXACTLY the two-step lsh_candidate_pairs + _pair_estimates
-    rows — it exists only to halve the signature-subtree evaluations."""
-    from pbx_ds_ocr_server_spark.operators.dedup import (
-        _candidate_pair_estimates,
-        _pair_estimates,
-        banding,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sigs = minhash_signatures(docs.select("doc_id", "text"))
-    two_step = _pair_estimates(
-        sigs, lsh_candidate_pairs(sigs, banding(4, 2)), 4
-    )
-    fused = _candidate_pair_estimates(sigs, banding(4, 2), 4)
-    assert sorted(map(tuple, fused.collect())) == sorted(
-        map(tuple, two_step.collect())
-    )
-
-
 # ----------------------------------------------------- ExactSubstr removal
 @pytest.fixture(scope="module")
 def es_docs(spark):

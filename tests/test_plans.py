@@ -204,8 +204,9 @@ def test_estimate_band_join_carries_no_signature_columns(spark):
     the wide melt would reintroduce the xa*/yb* aliases below the band
     join."""
     from pbx_ds_ocr_server_spark.operators.dedup import (
-        _candidate_pair_estimates,
+        _pair_estimates,
         banding,
+        lsh_candidate_pairs,
         minhash_signatures,
     )
 
@@ -213,8 +214,8 @@ def test_estimate_band_join_carries_no_signature_columns(spark):
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
     sigs = minhash_signatures(docs)
-    plan = _candidate_pair_estimates(
-        sigs, banding(4, 2), 4
+    plan = _pair_estimates(
+        sigs, lsh_candidate_pairs(sigs, bands=banding(4, 2)), 4
     )._jdf.queryExecution().executedPlan().toString()
     import re
 
