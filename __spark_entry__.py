@@ -579,18 +579,16 @@ def _ann_ivf_kmeans_sql(
 def _ann_ivf_pq_sql(
     m: int = 2, ks: int = 4, iters: int = 2, k: int = 5, dims: int = 64,
 ) -> str:
-    """Mirror of the PRODUCTION IVFADC pair operators/pq.pq_build +
-    pq_search (round 8 — the slot previously replayed the per-list demo
-    ivf_pq_topk): global per-subspace codebooks via unrolled Lloyd's
-    (centroid_round_dp=5, same init/tie/empty-cluster rules as the
-    ann_ivf_kmeans mirror) trained on the DETERMINISTIC fit subsample
-    vec_id % 7 = 1; the coarse table = per-label centroids at 6dp
+    """Mirror of the IVFADC pair operators/pq.pq_build + pq_search: global
+    per-subspace codebooks via unrolled Lloyd's (centroid_round_dp=5, same
+    init/tie/empty-cluster rules as the ann_ivf_kmeans mirror) trained on
+    the DETERMINISTIC fit subsample vec_id % 7 = 1; the coarse table = per-label centroids at 6dp
     (label_centroid_vectors round_dp=6); list ranking by cosine rounded
-    HALF-AWAY at 6dp, tie lowest label (pq_search's driver-side rule ==
-    ivf_probe_labels'); then nearest-code assignment of the probed list
-    against the GLOBAL codebooks and asymmetric-distance tables rounded
-    to 5dp per entry before the ADC sum — bit-identical to the
-    driver-side adc_tables half-away rounding.
+    HALF-AWAY at 6dp, tie lowest label (pq_search's driver-side rule);
+    then nearest-code assignment of the probed list against the GLOBAL
+    codebooks and asymmetric-distance tables rounded to 5dp per entry
+    before the ADC sum — bit-identical to the driver-side adc_tables
+    half-away rounding.
 
     Every DISTANCE here is summed with list_sum over an ascending-index
     list_transform — the same sequential order as Spark's aggregate fold
@@ -1079,11 +1077,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         threshold=0.999,
         n_planes=8,
         dims=64,
-        # impl='expr': the JVM sequential fold whose summation ORDER matches
-        # the DuckDB mirror's list_sum bit-for-bit — a hash-gated query must
-        # be exact-by-construction, not exact-up-to-SIMD-summation-order
-        # (production callers keep the default Arrow matmul)
-        impl="expr",
     ).withColumn("cos", F.round("cos", 5))
 
     # --- similarity-search tier ---
@@ -1098,13 +1091,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def ann_lsh_histogram(spark, sf):
-        # impl='expr' for the same reason as embedding_neardup_pairs: the
-        # oracle gate needs the mirror's exact summation order.
         # deliberately NOT fanned out (round-9 measurement): single
         # consumer, so there is no re-evaluation to save, and the 2k-row
         # bucket fold on 1-2 cores beats an extra exchange + stage
         return (
-            with_lsh_bucket(_emb(spark, sf), n_planes=8, dims=64, impl="expr")
+            with_lsh_bucket(_emb(spark, sf), n_planes=8, dims=64)
             .groupBy("bucket")
             .agg(F.count("*").alias("n"))
         )
@@ -1151,9 +1142,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ),
             every=3,
         )
-        # FUSED pass (round-6 review): one payload scan, no id join — the
-        # composable binary_metadata/png_pixel_features pair stays
-        # pytest-covered; the slot runs the hot-path shape
+        # one payload scan, no id join
         meta = binary_pixel_metadata(payloads, id_col="id")
         # n_bytes IS closed-form for the fixed-layout av containers (44 +
         # PCM bytes / 144 + mdat payload), unlike zlib/Huffman media;
@@ -1309,9 +1298,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def ann_ivf_pq_top5(spark, sf):
-        # round-8 rebuild: the slot now drives the PRODUCTION IVFADC path
-        # (pq_build once → pq_search), not the per-list re-fit demo
-        # ivf_pq_topk (which stays pytest-covered). Global per-subspace
+        # the IVFADC path (pq_build once → pq_search). Global per-subspace
         # codebooks are trained on a DETERMINISTIC subsample (vec_id % 7
         # == 1 — the 100 TB fit-on-a-sample recipe, hash-mirrorable unlike
         # Bernoulli sampling), the whole corpus is encoded, the coarse

@@ -34,5 +34,15 @@ class ExtractConfig:
                                         # (html.parser events); recorded in
                                         # job lineage (sources/writer.py)
 
+    def __post_init__(self) -> None:
+        # an unknown value would silently run the default kernel/renderer
+        # while lineage records the name that was asked for
+        if self.mode not in ("plain", "markdown"):
+            raise ValueError(f"mode={self.mode!r}: expected 'plain' or 'markdown'")
+        if self.html_backend not in ("fast", "strict"):
+            raise ValueError(
+                f"html_backend={self.html_backend!r}: expected 'fast' or 'strict'"
+            )
+
 
 DEFAULT_CONFIG = ExtractConfig()

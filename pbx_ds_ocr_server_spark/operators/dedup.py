@@ -811,7 +811,6 @@ def embedding_neardup_lsh(
     threshold: float = 0.999,
     n_planes: int = 8,
     dims: int | None = None,
-    impl: str = "pandas",
 ) -> DataFrame:
     """Corpus-scale embedding near-dedup: hyperplane-LSH bucketing →
     Hamming-≤1 multiprobe candidate join → exact cosine verify.
@@ -832,25 +831,20 @@ def embedding_neardup_lsh(
     with fewer planes or accept the cost of more probes. Cost: n_planes+1
     probe rows per vector, candidate count ≈ Σ_bucket n_b·(n_b+probed)/2.
 
-    ``impl`` picks the bucket computation (see similarity.with_lsh_bucket):
-    'pandas' (default) is the Arrow matmul production path; 'expr' is the
-    sequential JVM fold whose summation ORDER matches the ANSI-SQL mirror
-    bit-for-bit — use it for oracle/hash-gated runs, where a blocked-SIMD
-    sum flipping a sign on a dot product within float ulps of zero would
-    make the gate nondeterministically fragile.
+    Buckets come from similarity.with_lsh_bucket: a sequential JVM fold
+    whose summation ORDER matches the ANSI-SQL mirror bit-for-bit, so the
+    hash-gated driver query is exact by construction.
     """
     # lazy import: similarity.py imports cosine() from this module
     from pbx_ds_ocr_server_spark.operators.similarity import with_lsh_bucket
 
     # materialize the bucketed relation ONCE: three consumers re-scan it
     # (probes, the id2 join side, va/vb) and the bucket computation —
-    # n_planes fold dot products per row on the expr path — would
-    # otherwise run per consumer (round 9). At corpus scale prefer
-    # impl='pandas' (matmul) and note the checkpoint holds (id, vec,
-    # bucket) in executor storage — the standard bucketed-frontier
-    # materialization.
+    # n_planes fold dot products per row — would otherwise run per
+    # consumer (round 9). The checkpoint holds (id, vec, bucket) in
+    # executor storage — the standard bucketed-frontier materialization.
     b = materialize(
-        with_lsh_bucket(df, vec_col, n_planes, dims, impl=impl).select(
+        with_lsh_bucket(df, vec_col, n_planes, dims).select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "bucket"
         )
     )

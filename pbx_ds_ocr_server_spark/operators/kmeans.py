@@ -74,10 +74,9 @@ def md5_init_vectors(
     )
     if not rows:
         # an uninformative IndexError from len(centroids[0]) downstream
-        # helps nobody; mirror ivf_probe_labels' explicit empty-frame
-        # rejection. (FEWER than k rows is deliberate: per-list PQ fits
-        # legitimately train small lists with < ks vectors — the oracle
-        # replays the same shrunken init.)
+        # helps nobody; reject the empty frame explicitly. (FEWER than k
+        # rows is deliberate: a small PQ fit sample may hold < ks vectors
+        # — the oracle replays the same shrunken init.)
         raise ValueError("k-means init over an empty frame")
     return [[float(x) for x in r[vec_col]] for r in rows]
 

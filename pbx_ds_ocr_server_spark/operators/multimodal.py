@@ -8,11 +8,10 @@ unfilter; grey/RGB/RGBA/palette/grey+alpha, 1-16 bit, Adam7 — round 7
 closed the palette/16-bit/interlace declines) and JPEG through
 `kernels/jpeg_codec` (baseline-sequential Huffman + IDCT; round 7 shipped
 grayscale, round 8 adds 3-component YCbCr with 4:4:4/4:2:0/4:2:2
-sampling, chroma upsample and BT.601 RGB conversion). All Arrow-batched
-via ``mapInPandas``, no image libraries. Progressive/arithmetic JPEG and
-CMYK/Adobe-RGB scans still decline typed inside the codec;
-``fake_feature`` remains as a deterministic stand-in for a decode→embed
-step in schema-level pipeline tests.
+sampling, chroma upsample and BT.601 RGB conversion). One operator,
+:func:`binary_pixel_metadata`, reads each payload once in one Arrow-batched
+``mapInPandas`` pass, no image libraries. Arithmetic-coded JPEG and
+CMYK/Adobe-RGB scans still decline typed inside the codec.
 """
 
 from __future__ import annotations
@@ -25,11 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from pbx_ds_ocr_server_spark.kernels.av_meta import mp4_info, wav_info
-
-META_SCHEMA = (
-    "id bigint, n_bytes bigint, kind string, width int, height int,"
-    " digest string"
-)
 
 
 def png_dimensions(payload: bytes) -> tuple[int, int] | None:
@@ -82,13 +76,13 @@ def sniff_kind(payload: bytes) -> str:
 
 def decode_image(payload: bytes) -> tuple[int, int, int, bytes]:
     """REAL pixel decode for both raster formats: PNG through the
-    pure-Python scanline codec (`kernels/png_codec`) and JPEG through the
-    baseline-sequential codec (`kernels/jpeg_codec`; grayscale round 7,
-    YCbCr color round 8). → (width, height, channels, raw row-major
+    pure-Python scanline codec (`kernels/png_codec`) and JPEG through
+    `kernels/jpeg_codec` (baseline grayscale round 7, YCbCr color and
+    Huffman progressive round 8). → (width, height, channels, raw row-major
     8-bit bytes — interleaved RGB for color JPEG). Out-of-scope
-    subformats (progressive/arithmetic JPEG, CMYK, Adobe-RGB) raise the
+    subformats (arithmetic-coded JPEG, CMYK, Adobe-RGB) raise the
     codecs' typed errors; non-raster kinds raise ``ValueError`` — header
-    metadata still flows through :func:`binary_metadata`. Reference
+    metadata still flows through :func:`binary_pixel_metadata`. Reference
     analog: the raster branch feeds a GPU OCR model,
     `/root/reference/app/services/dsocr_model.py:368-405`."""
     from pbx_ds_ocr_server_spark.kernels.jpeg_codec import jpeg_decode
@@ -101,13 +95,14 @@ def decode_image(payload: bytes) -> tuple[int, int, int, bytes]:
         return jpeg_decode(payload)
     raise ValueError(
         f"no pure-python pixel decode for kind={kind!r} — "
-        "binary_metadata() provides header-level metadata for it"
+        "binary_pixel_metadata() provides header-level metadata for it"
     )
 
 
 def _raster_pixel_stats(payload: bytes, kind: str) -> dict:
-    """Shared decode→summarize dispatch for the pixel-feature operators.
-    Raises ValueError (or a codec subtype) for non-raster/undecodable."""
+    """Decode→summarize dispatch of :func:`binary_pixel_metadata`'s raster
+    branch. Raises ValueError (or a codec subtype) for non-raster or
+    undecodable payloads."""
     if kind == "png":
         from pbx_ds_ocr_server_spark.kernels.png_codec import (
             png_pixel_stats,
@@ -123,101 +118,6 @@ def _raster_pixel_stats(payload: bytes, kind: str) -> dict:
     raise ValueError(f"no pixel decode for kind={kind!r}")
 
 
-def fake_feature(payload: bytes, dims: int = 8) -> list[float]:
-    """Deterministic stand-in for a decode→embed step: md5-derived floats in
-    [0,1). Lets pipelines exercise the full schema without decode libs."""
-    d = hashlib.md5(payload or b"").digest()
-    return [b / 255.0 for b in d[:dims]]
-
-
-def binary_metadata(
-    df: DataFrame, id_col: str = "id", bin_col: str = "payload"
-) -> DataFrame:
-    """(id, payload:binary) → (id, n_bytes, kind, width, height, digest).
-    One Arrow-batched pass; pure byte parsing. A NULL payload yields an
-    all-NULL metadata row (id only) — metadata is never fabricated for a
-    payload that does not exist (round-7 advice closure; the round-5
-    NULL-propagation fix upstream would otherwise be undone here)."""
-    src = df.selectExpr(f"{id_col} as id", f"{bin_col} as payload")
-    cols = ["id", "n_bytes", "kind", "width", "height", "digest"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for r in b.itertuples():
-                row = {c: None for c in cols}
-                row["id"] = r.id
-                if r.payload is not None:
-                    p = bytes(r.payload)
-                    dims = png_dimensions(p) or jpeg_dimensions(p)
-                    row.update(
-                        n_bytes=len(p),
-                        kind=sniff_kind(p),
-                        width=dims[0] if dims else None,
-                        height=dims[1] if dims else None,
-                        digest=hashlib.md5(p).hexdigest(),
-                    )
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return src.mapInPandas(run, schema=META_SCHEMA)
-
-
-PIXEL_SCHEMA = (
-    "id bigint, px_width int, px_height int, channels int, n_px bigint,"
-    " luma_mean double, luma_entropy double, decode_ok boolean"
-)
-
-
-def pixel_features(
-    df: DataFrame, id_col: str = "id", bin_col: str = "payload"
-) -> DataFrame:
-    """(id, payload:binary) → decoded-pixel curation features per raster
-    payload (PNG, or JPEG — baseline grayscale/YCbCr color and Huffman
-    progressive since round 8): luminance mean and byte
-    entropy of the luminance plane, plus ``decode_ok`` = the payload fully
-    decoded (the codecs REJECT header-vs-stream mismatches, CRC
-    corruption, duplicate-IHDR forgeries, truncation and bombs — a true
-    flag means structure-consistent pixels; a truncated or bombed stream
-    lands in the null row, never a fake true). Non-raster, NULL, and
-    undecodable payloads yield a row with null features rather than
-    dropping — curation gates decide, the operator reports.
-
-    One Arrow-batched ``mapInPandas`` pass, same shape as
-    :func:`binary_metadata`: the payload column never shuffles, decode
-    cost is per-row bounded by the codecs' MAX_PIXELS guard."""
-    src = df.selectExpr(f"{id_col} as id", f"{bin_col} as payload")
-    cols = [
-        "id", "px_width", "px_height", "channels", "n_px",
-        "luma_mean", "luma_entropy", "decode_ok",
-    ]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for r in b.itertuples():
-                row = {c: None for c in cols}
-                row["id"] = r.id
-                if r.payload is not None:
-                    p = bytes(r.payload)
-                    try:
-                        st = _raster_pixel_stats(p, sniff_kind(p))
-                    except ValueError:  # non-raster / unsupported / bad
-                        rows.append(row)
-                        continue
-                    row.update(st)
-                    row["decode_ok"] = True
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return src.mapInPandas(run, schema=PIXEL_SCHEMA)
-
-
-# the round-6 name — PNG was the only decodable kind then; the operator
-# now also decodes baseline (gray + YCbCr color) and progressive JPEG
-png_pixel_features = pixel_features
-
-
 FULL_SCHEMA = (
     "id bigint, n_bytes bigint, kind string, width int, height int,"
     " digest string, channels int, n_px bigint, luma_mean double,"
@@ -229,13 +129,21 @@ FULL_SCHEMA = (
 def binary_pixel_metadata(
     df: DataFrame, id_col: str = "id", bin_col: str = "payload"
 ) -> DataFrame:
-    """:func:`binary_metadata` + :func:`pixel_features` FUSED into one
-    Arrow-batched pass: every payload byte is read once, the header parse
-    is shared, and there is no id join afterwards (each separate
-    mapInPandas discards partitioning, so composing the two operators
-    costs a second Python pass plus a shuffle on both sides of the join —
-    the composable forms stay available, this is the hot-path shape).
-    A NULL payload yields an all-NULL row (id only).
+    """(id, payload:binary) → header metadata (n_bytes, kind, width,
+    height, digest) plus decoded-pixel curation features, in ONE
+    Arrow-batched pass: every payload byte is read once and there is no id
+    join afterwards. A NULL payload yields an all-NULL row (id only) —
+    metadata is never fabricated for a payload that does not exist.
+
+    Raster payloads (PNG, or JPEG — baseline grayscale/YCbCr color and
+    Huffman progressive) carry channels, n_px, luminance mean and byte
+    entropy of the luminance plane, and ``decode_ok`` = the payload fully
+    decoded (the codecs REJECT header-vs-stream mismatches, CRC
+    corruption, duplicate-IHDR forgeries, truncation and bombs, so a true
+    flag means structure-consistent pixels). Non-raster and undecodable
+    payloads keep a row with null features rather than dropping —
+    curation gates decide, the operator reports. Decode cost is per-row
+    bounded by the codecs' MAX_PIXELS guard.
 
     Round 8 extends the typed-metadata surface to AUDIO/VIDEO containers
     (`kernels/av_meta`): WAV rows carry channels / sample_rate /

@@ -9,6 +9,7 @@ candidates by ASYMMETRIC distance (ADC): the query stays full-precision,
 per-subspace distances to every codebook centroid are computed ONCE into a
 lookup table, and a candidate's approximate distance is the sum of ``m``
 table lookups on its codes — no vector bytes touched at query time.
+One search path: :func:`pq_build` once, then :func:`pq_search` per query.
 
 Scale story: the storage/IO win is the point. At D=64 float32, raw vectors
 are 256 B/row; m=8 one-byte codes are 8 B/row (32× compression) — a 100 TB
@@ -27,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pbx_ds_ocr_server_spark.caching import materialize
 from pbx_ds_ocr_server_spark.operators.kmeans import kmeans_fit
 from pbx_ds_ocr_server_spark.operators.similarity import as_double_array
 
@@ -173,60 +173,6 @@ def pq_adc_topk(
     )
 
 
-def ivf_pq_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 5,
-    m: int = 2,
-    ks: int = 4,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    round_dp: int = 5,
-    centroid_round_dp: int | None = None,
-) -> DataFrame:
-    """End-to-end IVF-PQ: coarse-select the best inverted list (per-label
-    centroid nearest the query by rounded cosine — identical to
-    :func:`operators.similarity.ivf_topk`'s coarse stage), fit per-list PQ
-    codebooks, encode the list, rank by ADC. Returns (neighbor, adc).
-
-    Codebooks here are per-list (fit on the selected list, not on global
-    residuals as Jégou's IVFADC does) — the oracle-mirrorable simplification:
-    the Lloyd's replay stays k·m tiny runs over one list. At production
-    scale the fit is a one-off build step; the query path is the cheap
-    part being demonstrated.
-
-    The selected list is checkpointed once by :func:`caching.materialize`
-    (the per-subspace Lloyd's jobs would otherwise rescan the source
-    ~10×); the returned k-row result stays lazy and owns those blocks, so
-    callers have nothing to clean up."""
-    from pbx_ds_ocr_server_spark.operators.similarity import ivf_best_label
-
-    best = ivf_best_label(
-        df, query_vec, vec_col=vec_col, label_col=label_col,
-        round_dp=round_dp,
-    )
-    # ONE inverted list (small by construction) feeds several driver-side
-    # jobs: the shared init collect, each subspace's Lloyd iteration aggs,
-    # the encode and the final ranking — checkpoint it or every job
-    # rescans the source
-    cand = materialize(df.filter(F.col(label_col) == best))
-    codebooks = pq_fit(
-        cand,
-        dims=len(query_vec),
-        m=m,
-        ks=ks,
-        iters=iters,
-        id_col=id_col,
-        vec_col=vec_col,
-        centroid_round_dp=centroid_round_dp,
-    )
-    dt = adc_tables(query_vec, codebooks, round_dp=centroid_round_dp)
-    codes = pq_encode(cand, codebooks, id_col=id_col, vec_col=vec_col)
-    return pq_adc_topk(codes, dt, k=k, id_col=id_col, round_dp=round_dp)
-
-
 # --- production IVFADC shape (round 7): build once, search many ---
 
 
@@ -270,17 +216,15 @@ def pq_build(
 ) -> PqIndex:
     """The ONE-OFF build step of Jégou-style IVFADC (TPAMI 2011, §IV):
     train global per-subspace codebooks ONCE, encode the whole corpus,
-    snapshot the coarse-quantizer table. Contrast with the oracle-demo
-    :func:`ivf_pq_topk`, which re-fits per-list codebooks inside every
-    query — fine for a hash-gated demonstration, wrong shape for a
-    100 TB corpus where the fit must amortize across all queries.
+    snapshot the coarse-quantizer table. The fit amortizes across every
+    :func:`pq_search` query instead of running inside one.
 
     ``fit_df`` lets the Lloyd's training run on a sample (at corpus scale
     you fit codebooks on ~1M sampled vectors, then encode everything —
     pass ``df.sample(0.001)``); default trains on ``df`` itself.
-    Simplification vs the paper kept from the demo tier: codebooks are
-    trained on RAW vectors, not per-list residuals — one global codebook
-    table instead of coupling every code to its list's centroid. The cost
+    Simplification vs the paper: codebooks are trained on RAW vectors,
+    not per-list residuals — one global codebook table instead of
+    coupling every code to its list's centroid. The cost
     is some quantization error near list boundaries; the scan shape and
     compression are identical.
 
@@ -309,10 +253,8 @@ def pq_build(
         vec_col=vec_col,
         carry_cols=("label",),
     )
-    # round_dp=6 matches the IVF coarse stage's centroid rounding
-    # (similarity.ivf_probe_labels), so the same data yields the same
-    # coarse table in both paths — probe selection cannot drift on a
-    # sub-ulp centroid difference between the demo and production shapes
+    # round_dp=6: the coarse table the ann_ivf_pq_top5 mirror replays
+    # (per-label centroids at 6dp)
     coarse = [
         (r["label"], list(r["cvec"]))
         for r in label_centroid_vectors(
@@ -351,12 +293,11 @@ def pq_search(
     exhaustive ADC scan and recall is bounded only by quantization."""
     if nprobe < 1:
         raise ValueError(f"nprobe={nprobe}")
-    # rank by ROUNDED cosine with ties to the lowest label — the exact
-    # selection rule of similarity.ivf_probe_labels (round_dp=6, F.round
-    # half-away semantics), so nprobe=1 probes the same list the demo/
-    # oracle coarse stage picks on the same data. F.round is half-AWAY on
-    # signed values: a bare floor(x*1e6+0.5) is half-UP and diverges from
-    # it on negative 6dp half-ties, so round the magnitude and re-sign.
+    # rank by cosine ROUNDED to 6dp with ties to the lowest label — the
+    # rule the ann_ivf_pq_top5 mirror replays with SQL round(). That round
+    # is half-AWAY on signed values: a bare floor(x*1e6+0.5) is half-UP
+    # and diverges from it on negative 6dp half-ties, so round the
+    # magnitude and re-sign.
     import math
 
     def _cos6(c: list[float]) -> float:

@@ -8,20 +8,22 @@ Two paths:
     sign bits of the embedding against deterministic pseudo-hyperplanes
     derived from md5 (reproducible in ANSI SQL — no RNG, no model state).
     Queries probe only their bucket: the scale path (candidate set shrinks
-    ~2^planes), trading recall for a bounded, shuffle-free scan.
+    ~2^planes), trading recall for a bounded, shuffle-free scan. Rows and
+    the query are bucketed by one rule, a sequential left-to-right fold
+    per plane — the JVM expression for rows, the same fold in Python for
+    the one query vector.
 
 Both are pure column expressions — JVM-side, no Python per row.
+``label_centroids`` / ``label_centroid_vectors`` build the per-label
+coarse-quantizer table that `operators/pq.pq_build` snapshots.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from pbx_ds_ocr_server_spark.operators.dedup import cosine
 
@@ -31,21 +33,22 @@ def as_double_array(col: Column | str) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
-def hyperplane(plane: int, dims: int) -> Column:
-    """Deterministic ±1 pseudo-hyperplane: component i is +1 when the first
-    hex digit of md5('<plane>:<i>') is 0-7, else −1.
-
-    Materialized driver-side as a LITERAL array: the md5 rule runs dims
-    times per plane on the driver, zero times per row (the first-cut column
-    form evaluated dims×planes md5s per ROW — the whole reason impl='expr'
-    was slow). Values are bit-identical to the SQL mirror's per-row rule."""
-    signs = [
+def _plane_signs(plane: int, dims: int) -> list[float]:
+    """The ±1 components of pseudo-hyperplane ``plane``: component i is +1
+    when the first hex digit of md5('<plane>:<i>') is 0-7, else −1 — the
+    rule the SQL mirror evaluates per row."""
+    return [
         1.0
         if hashlib.md5(f"{plane}:{i}".encode()).hexdigest()[0] in "01234567"
         else -1.0
         for i in range(dims)
     ]
-    return F.array(*[F.lit(s) for s in signs])
+
+
+def hyperplane(plane: int, dims: int) -> Column:
+    """:func:`_plane_signs` as a LITERAL array: the md5 rule runs dims times
+    per plane on the driver, zero times per row."""
+    return F.array(*[F.lit(s) for s in _plane_signs(plane, dims)])
 
 
 def lsh_bucket(vec_col: Column | str, n_planes: int, dims: int) -> Column:
@@ -64,67 +67,17 @@ def lsh_bucket(vec_col: Column | str, n_planes: int, dims: int) -> Column:
     return bucket
 
 
-def hyperplane_matrix(n_planes: int, dims: int) -> np.ndarray:
-    """dims × n_planes ±1 matrix — the SAME md5 rule as :func:`hyperplane`,
-    materialized once on the driver (tiny: dims × planes bytes)."""
-    H = np.empty((dims, n_planes), dtype=np.float64)
-    for p in range(n_planes):
-        for i in range(dims):
-            first = hashlib.md5(f"{p}:{i}".encode()).hexdigest()[0]
-            H[i, p] = 1.0 if first in "01234567" else -1.0
-    return H
-
-
-def _bucket_of(vecs: np.ndarray, H: np.ndarray) -> np.ndarray:
-    pows = (1 << np.arange(H.shape[1], dtype=np.int64)).astype(np.int64)
-    return ((vecs @ H) > 0).astype(np.int64) @ pows
-
-
-def lsh_bucket_pandas(n_planes: int, dims: int):
-    """Arrow-batched bucket computation: one float64 matmul per batch
-    against the constant hyperplane matrix — measured ~5× over the nested
-    JVM aggregate/zip_with lambdas, which stay outside whole-stage codegen.
-    Same md5 determinism, so the ANSI-SQL oracle mirror is unchanged (sign
-    decisions can differ from sequential summation only when a dot product
-    sits within ~1e-13 of zero — measure-zero for real embeddings)."""
-    H = hyperplane_matrix(n_planes, dims)
-
-    @pandas_udf("long")
-    def _bucket(v: pd.Series) -> pd.Series:
-        vals = v.tolist()
-        # NULL or wrong-length embeddings must bucket to 0 like the expr
-        # path (whose when(dot>0) falls through on NULL) instead of
-        # raising an object-dtype matmul error that kills the whole stage
-        # — the two documented-interchangeable impls must agree on
-        # exactly the rows that used to crash this one (eleventh review)
-        dims_n = H.shape[0]
-        clean = [
-            x if x is not None and len(x) == dims_n else [0.0] * dims_n
-            for x in vals
-        ]
-        if not clean:
-            return pd.Series(np.empty(0, dtype=np.int64))
-        return pd.Series(_bucket_of(np.array(clean, dtype=np.float64), H))
-
-    return _bucket
-
-
 def with_lsh_bucket(
     df: DataFrame,
     vec_col: str = "embedding",
     n_planes: int = 8,
     dims: int | None = None,
-    impl: str = "pandas",
 ) -> DataFrame:
-    """Add the LSH 'bucket' column. ``impl='pandas'`` (default) uses the
-    Arrow-batched matmul — the production path. ``impl='expr'`` is the pure
-    column-expression form whose sequential left-to-right fold matches the
-    ANSI-SQL mirror's summation ORDER bit-for-bit; use it wherever results
-    are hash-gated against the oracle (numpy's blocked/SIMD summation can
-    flip a sign bit when a dot product sits within float ulps of zero —
-    measure-zero for real embeddings, but 'almost always equal' is the
-    wrong property for an exactness gate). With literal hyperplane arrays
-    the expr path is within ~2× of the matmul."""
+    """Add the LSH 'bucket' column (:func:`lsh_bucket`). Each dot product
+    is a sequential left-to-right fold, the summation ORDER of the ANSI-SQL
+    mirror's list_sum, so a sign bit cannot flip between engines on a dot
+    product within float ulps of zero. NULL and wrong-length embeddings
+    bucket to 0 (the fold is NULL, and ``when(dot > 0)`` falls through)."""
     if dims is None:
         # one tiny probe job per call — pass dims explicitly in loops
         first = df.select(vec_col).first()
@@ -134,8 +87,6 @@ def with_lsh_bucket(
                 f" {vec_col!r}; pass dims= explicitly"
             )
         dims = len(first[0])
-    if impl == "pandas":
-        return df.withColumn("bucket", lsh_bucket_pandas(n_planes, dims)(vec_col))
     return df.withColumn("bucket", lsh_bucket(vec_col, n_planes, dims))
 
 
@@ -196,63 +147,6 @@ def label_centroid_vectors(
     )
 
 
-def ivf_probe_labels(
-    df: DataFrame,
-    query_vec: list[float],
-    nprobe: int = 1,
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    round_dp: int = 6,
-) -> list:
-    """The IVF coarse stage, generalized to multiprobe: the ``nprobe``
-    labels whose per-label centroids have the highest ROUNDED cosine to
-    the query, ordered best-first, ties → lowest label. Raises on an empty
-    frame (a coarse quantizer over nothing is a caller bug, not an empty
-    result)."""
-    cvec = label_centroid_vectors(df, vec_col, label_col, round_dp)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = cvec.select(
-        "label", F.round(cosine(F.col("cvec"), q), round_dp).alias("ccos")
-    )
-    rows = scored.orderBy(F.desc("ccos"), F.asc("label")).take(nprobe)
-    if not rows:
-        raise ValueError("IVF coarse stage over an empty frame")
-    return [r["label"] for r in rows]
-
-
-def ivf_best_label(
-    df: DataFrame,
-    query_vec: list[float],
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    round_dp: int = 6,
-):
-    """nprobe=1 :func:`ivf_probe_labels`, shared by :func:`ivf_topk` and
-    `operators/pq.ivf_pq_topk` so the selection rule cannot drift."""
-    return ivf_probe_labels(
-        df, query_vec, 1, vec_col, label_col, round_dp
-    )[0]
-
-
-def ivf_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    round_dp: int = 6,
-) -> DataFrame:
-    """IVF-style ANN: pick the nearest coarse-quantizer centroid (here the
-    per-label means), then exact-search only that list — the classic
-    inverted-file trade: cost drops to |list|, recall bounded by the
-    quantizer. Runs as two tiny jobs + one filtered scan; no shuffle of
-    vectors beyond the centroid agg."""
-    best = ivf_best_label(df, query_vec, vec_col, label_col, round_dp)
-    cand = df.filter(F.col(label_col) == best)
-    return brute_force_topk(cand, query_vec, k, id_col, vec_col, round_dp)
-
-
 def lsh_topk(
     df_bucketed: DataFrame,
     query_vec: list[float],
@@ -265,14 +159,15 @@ def lsh_topk(
     expectation). df_bucketed must carry the 'bucket' column."""
     dims = len(query_vec)
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    # query bucket: same matmul math as lsh_bucket_pandas, driver-side
-    # (no Spark job for one vector)
-    qbucket = int(
-        _bucket_of(
-            np.asarray([query_vec], dtype=np.float64),
-            hyperplane_matrix(n_planes, dims),
-        )[0]
-    )
+    # query bucket driver-side (no Spark job for one vector), by the same
+    # left-to-right fold as lsh_bucket so an identical row always shares it
+    qbucket = 0
+    for p in range(n_planes):
+        acc = 0.0
+        for x, h in zip(query_vec, _plane_signs(p, dims)):
+            acc += float(x) * h
+        if acc > 0:
+            qbucket |= 1 << p
     cand = df_bucketed.filter(F.col("bucket") == qbucket)
     return (
         cand.select(

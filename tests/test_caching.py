@@ -59,24 +59,3 @@ def test_slot_repeat_invocation_does_not_leak_cache(spark, name):
     # 1/call.
     limit = 6 if name == "corpus_curation" else 2
     assert counts[2] - counts[0] <= limit, counts
-
-
-def test_ivf_pq_topk_repeat_invocation_does_not_leak_cache(spark):
-    from pbx_ds_ocr_server_spark.operators.pq import ivf_pq_topk
-
-    rows = [
-        (i, f"c{i % 3}", [float((i * 7 + d * 3) % 11) for d in range(8)])
-        for i in range(1, 31)
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id bigint, label string, embedding array<double>"
-    )
-    counts = []
-    for _ in range(3):
-        out = ivf_pq_topk(
-            df, [1.0, 2, 3, 4, 5, 6, 7, 8], k=3, centroid_round_dp=5
-        )
-        assert out.count() == 3
-        del out
-        counts.append(_n_persistent(spark))
-    assert counts[2] - counts[0] <= 2, counts

@@ -4,6 +4,8 @@ import ast
 import dataclasses
 from pathlib import Path
 
+import pytest
+
 import pbx_ds_ocr_server_spark
 from pbx_ds_ocr_server_spark.config import ExtractConfig
 
@@ -19,3 +21,12 @@ def test_every_config_field_is_read():
     }
     fields = {f.name for f in dataclasses.fields(ExtractConfig)}
     assert fields - read == set()
+
+
+def test_unknown_mode_or_backend_is_rejected():
+    # lineage records cfg.html_backend, so an unknown name would claim a
+    # kernel that never ran
+    with pytest.raises(ValueError, match="html_backend"):
+        ExtractConfig(html_backend="Strict")
+    with pytest.raises(ValueError, match="mode"):
+        ExtractConfig(mode="html")

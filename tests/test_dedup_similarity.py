@@ -18,8 +18,7 @@ from pbx_ds_ocr_server_spark.operators.extract import (
     extract_pages,
 )
 from pbx_ds_ocr_server_spark.operators.multimodal import (
-    binary_metadata,
-    fake_feature,
+    binary_pixel_metadata,
     jpeg_dimensions,
     png_dimensions,
 )
@@ -120,6 +119,31 @@ def test_lsh_bucket_query_finds_identical_vector(spark):
     assert got.first().neighbor == 0 and got.first().cos == 1.0
 
 
+def test_lsh_topk_query_and_rows_share_the_bucket_rule(spark):
+    """A cancellation vector: plane 0's products are +1e16 at index 0,
+    −1e16 at index 4 and +1 at index 5. The left-to-right fold gives
+    (1e16 − 1e16) + 1 > 0, so bit 0 is set; a blocked or SIMD sum can
+    lose the +1 and clear it. The query bucket must follow the rows' fold,
+    or lsh_topk misses an identical vector."""
+    import hashlib
+
+    sign = [
+        1.0 if hashlib.md5(f"0:{i}".encode()).hexdigest()[0] in "01234567"
+        else -1.0
+        for i in range(64)
+    ]
+    vec = [0.0] * 64
+    vec[0], vec[4], vec[5] = 1e16 * sign[0], -1e16 * sign[4], sign[5]
+    rows = [(1, vec)] + [
+        (i, [float((i * 7 + d) % 5 - 2) for d in range(64)]) for i in range(2, 6)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    bucketed = with_lsh_bucket(emb, n_planes=8, dims=64)
+    assert bucketed.filter("vec_id = 1").first().bucket & 1
+    got = lsh_topk(bucketed, vec, k=1, n_planes=8).collect()
+    assert [(r.neighbor, r.cos) for r in got] == [(1, 1.0)]
+
+
 def test_png_jpeg_dimensions():
     import struct as st
 
@@ -137,19 +161,13 @@ def test_binary_metadata_end_to_end(spark):
     png = b"\x89PNG\r\n\x1a\n" + st.pack(">I", 13) + b"IHDR" + st.pack(">II", 32, 16)
     rows = [(1, bytearray(png)), (2, bytearray(b"%PDF-1.4 x")), (3, None)]
     df = spark.createDataFrame(rows, "id bigint, payload binary")
-    got = {r.id: r for r in binary_metadata(df).collect()}
+    got = {r.id: r for r in binary_pixel_metadata(df).collect()}
     assert got[1].kind == "png" and (got[1].width, got[1].height) == (32, 16)
     assert got[2].kind == "pdf" and got[2].width is None
     # NULL payload → all-NULL metadata row (round-7 advice closure:
     # never fabricate kind='empty'/md5(b"") for a payload that isn't there)
     assert got[3].kind is None and got[3].n_bytes is None
     assert got[3].digest is None
-
-
-def test_fake_feature_deterministic():
-    assert fake_feature(b"abc") == fake_feature(b"abc")
-    assert fake_feature(b"abc") != fake_feature(b"abd")
-    assert all(0.0 <= x < 1.0 for x in fake_feature(b"abc", dims=16))
 
 
 def test_layout_json_shape(spark, corpus):
@@ -238,7 +256,7 @@ def test_embedding_neardup_lsh_recall_on_perturbed_duplicates(spark):
 
     buckets = {
         r.vec_id: r.bucket
-        for r in with_lsh_bucket(both, n_planes=8, dims=64, impl="expr")
+        for r in with_lsh_bucket(both, n_planes=8, dims=64)
         .select("vec_id", "bucket")
         .collect()
     }
@@ -714,10 +732,9 @@ def test_exact_substr_empty_doc_reports_zero_words(spark):
     assert out == {1: 0, 2: 4}
 
 
-def test_lsh_bucket_impls_agree_on_null_and_ragged_embeddings(spark):
-    """Eleventh-review fix: the pandas matmul path crashed on NULL or
-    wrong-length embeddings while the expr path bucketed them to 0 — the
-    documented-interchangeable impls must agree on exactly those rows."""
+def test_lsh_bucket_null_and_ragged_embeddings_bucket_to_zero(spark):
+    """NULL or wrong-length embeddings bucket to 0 rather than failing the
+    stage: the fold is NULL and ``when(dot > 0)`` falls through."""
     from pbx_ds_ocr_server_spark.operators.similarity import with_lsh_bucket
 
     rows = [
@@ -726,12 +743,9 @@ def test_lsh_bucket_impls_agree_on_null_and_ragged_embeddings(spark):
         (3, [1.0, 2.0]),  # ragged: wrong dims
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got_p = {r.vec_id: r.bucket
-             for r in with_lsh_bucket(df, dims=4, impl="pandas").collect()}
-    got_e = {r.vec_id: r.bucket
-             for r in with_lsh_bucket(df, dims=4, impl="expr").collect()}
-    assert got_p == got_e
-    assert got_p[2] == 0 and got_p[3] == 0
+    got = {r.vec_id: r.bucket
+           for r in with_lsh_bucket(df, dims=4).collect()}
+    assert got[2] == 0 and got[3] == 0
 
 
 def test_with_lsh_bucket_empty_frame_raises_diagnostic(spark):

@@ -1,4 +1,5 @@
-"""PNG pixel codec + png_pixel_features — the round-6 decode layer."""
+"""PNG pixel codec + the pixel features of binary_pixel_metadata — the
+round-6 decode layer."""
 
 import math
 import struct
@@ -16,8 +17,8 @@ from pbx_ds_ocr_server_spark.kernels.png_codec import (
     png_pixel_stats,
 )
 from pbx_ds_ocr_server_spark.operators.multimodal import (
+    binary_pixel_metadata,
     decode_image,
-    png_pixel_features,
     synthetic_gradient_png,
     with_synthetic_png_payloads,
 )
@@ -367,13 +368,15 @@ def test_png_pixel_features_mixed_payloads(spark):
         (2, bytearray(png_encode(4, 3, bytes(12), 0)[:20])),  # truncated
     ]
     df = spark.createDataFrame(rows, "id bigint, payload binary")
-    out = {r.id: r.asDict() for r in png_pixel_features(df).collect()}
-    assert out[0]["px_width"] == 8 and out[0]["px_height"] == 8
+    out = {r.id: r.asDict() for r in binary_pixel_metadata(df).collect()}
+    assert out[0]["width"] == 8 and out[0]["height"] == 8
+    assert out[0]["n_px"] == 64
     assert out[0]["decode_ok"] is True and out[0]["channels"] == 1
     assert out[3]["channels"] == 3  # odd seed -> RGB
     assert out[3]["luma_mean"] == (3 % 64) + (8 + 3 % 9 - 1) / 2 + (8 + 3 % 7 - 1) / 2
     for bad in (1, 2):  # non-png and truncated: null features, not a drop
-        assert out[bad]["px_width"] is None and out[bad]["decode_ok"] is None
+        assert out[bad]["width"] is None and out[bad]["decode_ok"] is None
+        assert out[bad]["n_px"] is None
 
 
 def test_with_synthetic_png_payloads_split(spark):

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from pbx_ds_ocr_server_spark.operators.pq import (
     adc_tables,
-    ivf_pq_topk,
     pq_adc_topk,
     pq_encode,
     pq_fit,
@@ -84,18 +83,6 @@ def test_adc_ranks_own_cluster_first(spark, vecs):
     # every top-12 hit is from the query's cluster (centers 14+ apart,
     # jitter ±1 — PQ cells cannot confuse them)
     assert got <= c0_ids and len(got) == 12
-
-
-def test_ivf_pq_topk_end_to_end(spark, vecs):
-    query = [0, 0, 10.0, 0, 0, 0, 0, 0]  # cluster c2's center
-    out = ivf_pq_topk(
-        vecs, query, k=5, m=2, ks=4, iters=2, centroid_round_dp=5
-    ).collect()
-    assert len(out) == 5
-    c2_ids = {r[0] for r in _clustered_rows() if r[1] == "c2"}
-    assert {r.neighbor for r in out} <= c2_ids
-    # ascending ADC with (adc, id) tie-break
-    assert [r.adc for r in out] == sorted(r.adc for r in out)
 
 
 def test_pq_fit_rejects_indivisible_dims(vecs):
@@ -251,7 +238,7 @@ def test_pq_search_probe_prunes_partitioned_codes(spark, vecs, tmp_path):
 def test_pq_search_signed_half_away_rounding(spark):
     """Round-8 fix (VERDICT/ADVICE): F.round is half-AWAY on signed values;
     the old floor(x*1e6+0.5) coarse ranking was half-UP and probed a
-    different list than ivf_probe_labels on a negative 6dp half-tie.
+    different list than Spark's round() picks on a negative 6dp half-tie.
     cos(q, ca) = -0.4000005 EXACTLY in float64 (the tie is representable:
     0.4000005*1e6 == 400000.5): half-up rounds it to -0.4 (ties list b,
     tie-break → probes a), half-away to -0.400001 (list b strictly wins),
