@@ -832,15 +832,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.octet_length("text").cast("bigint").alias("text_bytes"),
         )
 
-    def extract_plain_strict(spark, sf_dir):
-        # U2 seam through the driver gate: same oracle as extract_plain,
-        # produced by the SECOND (html.parser) kernel
+    def _pdf_text(spark, sf_dir, mode, page_ranges=None):
+        # (doc_id, text_out, n_pages): the PDF kernels' text, plus the
+        # document page count that gates the F2 max_pages predicate
         from pbx_ds_ocr_server_spark.config import ExtractConfig
 
-        wrapped = wrapped_docs_df(spark, f"{sf_dir}/documents.parquet", "plain")
-        return extract(wrapped, ExtractConfig(html_backend="strict")).select(
-            _doc_id_from_url(), F.col("text").alias("text_out")
+        wrapped = wrapped_docs_df(spark, f"{sf_dir}/documents.parquet", mode)
+        return extract(wrapped, ExtractConfig(page_ranges=page_ranges)).select(
+            _doc_id_from_url(),
+            F.col("text").alias("text_out"),
+            F.col("n_pages").cast("bigint"),
         )
+
+    def extract_pdf_cid_aes(spark, sf_dir):
+        # ToUnicode CMap under AES-128: the crypt layer and the CMap reader
+        return _pdf_text(spark, sf_dir, "pdf_cid_aes")
+
+    def extract_pdf_embedded_tt(spark, sf_dir):
+        # no ToUnicode: text comes back only by inverting the embedded
+        # TrueType (3,1) cmap, the largest font path
+        return _pdf_text(spark, sf_dir, "pdf_embedded_tt")
+
+    def extract_pdf_page_order(spark, sf_dir):
+        # F3 page selection in the ORDER asked for: page 2, then page 1
+        return _pdf_text(spark, sf_dir, "pdf_simple", page_ranges="2,1")
 
     def extract_markdown(spark, sf_dir):
         from pbx_ds_ocr_server_spark.config import ExtractConfig
@@ -869,7 +884,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # slot goes to a query with a distinct failure mode (SURVEY §8).
     q["extract_boiler"] = extract_boiler
     q["extract_span_stats"] = extract_span_stats
-    q["extract_plain_strict"] = extract_plain_strict
+    q["extract_pdf_cid_aes"] = extract_pdf_cid_aes
+    q["extract_pdf_embedded_tt"] = extract_pdf_embedded_tt
+    q["extract_pdf_page_order"] = extract_pdf_page_order
     q["extract_markdown"] = extract_markdown
     # oracle-checked: doc_class is a pure sha256 hash of doc_id and each
     # class has a deterministic terminal status, so DuckDB can predict the
@@ -1280,15 +1297,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["ngram_topk"] = ngram_topk
 
-    # --- sessionization (gap-based, pure window composition) ---
-    def sessionization(spark, sf):
-        from pbx_ds_ocr_server_spark.operators.sessions import sessionize
-
-        ev = spark.read.parquet(f"{sf}/events.parquet")
-        return sessionize(ev, gap_seconds=1800)
-
-    q["sessionization"] = sessionization
-
     # --- IVF-style ANN: label centroids as coarse quantizer ---
     def label_centroids_q(spark, sf):
         from pbx_ds_ocr_server_spark.operators.similarity import label_centroids
@@ -1525,14 +1533,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["winnowing_fingerprints"] = winnowing
     q["repetition_metrics"] = repetition
-
-    # --- grouped-map (applyInPandas) tier ---
-    def zscore(spark, sf):
-        from pbx_ds_ocr_server_spark.operators.grouped import zscore_by_label
-
-        return zscore_by_label(_emb(spark, sf))
-
-    q["embedding_zscore"] = zscore
 
     # --- iterative algorithm (k-means IVF): Lloyd's loop hash-checked via
     # an unrolled 3-iteration SQL mirror; per-iteration centroid rounding
@@ -1800,29 +1800,37 @@ def oracle_sql() -> dict[str, str]:
         GROUP BY 1, 2
     """
 
-
-    sessionization_sql = """
-        WITH flagged AS (
-            SELECT user_id, event_id, ts,
-                   CASE WHEN lag(ts) OVER w IS NULL
-                             OR CAST(floor(epoch(ts)) AS BIGINT)
-                                - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
-                        THEN 1 ELSE 0 END AS is_start
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    # PDF slots: wrapped_docs_df lays NORM out as 8-word lines over
+    # n = 2 + doc_id % 3 pages of ceil(len(lines) / n) lines each
+    # (corpus.pdf_pages_for); the kernel joins lines, and pages, with a
+    # blank line
+    pdf_lines_cte = f"""
+        WITH w AS (
+            SELECT doc_id, 2 + doc_id % 3 AS n,
+                   string_split({NORM}, ' ') AS ws
+            FROM documents
         ),
-        sess AS (
-            SELECT user_id, ts,
-                   CAST(sum(is_start) OVER (
-                        PARTITION BY user_id ORDER BY ts, event_id
-                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-            FROM flagged
-        )
-        SELECT user_id, session_id, count(*) AS n_events,
-               min(ts) AS session_start,
-               CAST(floor(epoch(max(ts))) - floor(epoch(min(ts))) AS BIGINT)
-                   AS duration_sec
-        FROM sess GROUP BY 1, 2
+        l AS (
+            SELECT doc_id, n,
+                   list_transform(
+                       range(0, CAST(ceil(len(ws) / 8) AS BIGINT)),
+                       i -> array_to_string(ws[i * 8 + 1 : i * 8 + 8], ' ')
+                   ) AS lines
+            FROM w
+        )"""
+    pdf_text_sql = pdf_lines_cte + """
+        SELECT doc_id, array_to_string(lines, chr(10) || chr(10)) AS text_out,
+               CAST(n AS BIGINT) AS n_pages
+        FROM l
+    """
+    pdf_page_order_sql = pdf_lines_cte + """,
+        p AS (SELECT *, CAST(ceil(len(lines) / n) AS BIGINT) AS pp FROM l)
+        SELECT doc_id,
+               array_to_string(
+                   list_concat(lines[pp + 1 : 2 * pp], lines[1 : pp]),
+                   chr(10) || chr(10)) AS text_out,
+               CAST(n AS BIGINT) AS n_pages
+        FROM p
     """
 
     dedup_near_body = f"""docs_u AS ({DOCS_U}),
@@ -1965,7 +1973,9 @@ def oracle_sql() -> dict[str, str]:
         "extract_plain": f"SELECT doc_id, {NORM} AS text_out FROM documents",
         "extract_boiler": paras_sql,
         "extract_span_stats": span_stats_sql,
-        "extract_plain_strict": f"SELECT doc_id, {NORM} AS text_out FROM documents",
+        "extract_pdf_cid_aes": pdf_text_sql,
+        "extract_pdf_embedded_tt": pdf_text_sql,
+        "extract_pdf_page_order": pdf_page_order_sql,
         "extract_markdown": markdown_sql,
         "extract_status_counts": _status_counts_sql(),
         "token_counts_cjk": _token_counts_cjk_sql(),
@@ -2162,21 +2172,6 @@ def oracle_sql() -> dict[str, str]:
                 + bit_count(xor(xa2, yb2)) + bit_count(xor(xa3, yb3)) <= 3
         """,
         "ann_brute_top5": ann_sql,
-        "embedding_zscore": """
-            WITH e AS (
-                SELECT vec_id, label, i - 1 AS dim, embedding[i]::DOUBLE AS v
-                FROM embeddings, LATERAL (
-                    SELECT unnest(generate_series(1, len(embedding))) AS i)
-            ),
-            s AS (
-                SELECT label, dim, avg(v) AS m, stddev_pop(v) AS sd
-                FROM e GROUP BY 1, 2
-            )
-            SELECT e.vec_id, e.label, e.dim,
-                   round(CASE WHEN s.sd = 0 THEN 0
-                              ELSE (e.v - s.m) / s.sd END, 4) AS z
-            FROM e JOIN s USING (label, dim)
-        """,
         "ann_lsh_histogram": lsh_hist_sql,
         "multimodal_meta": _multimodal_meta_sql(),
         "tpch_q1": """
@@ -2227,7 +2222,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT w AS shingle, count(*) AS df FROM sh
             GROUP BY w ORDER BY df DESC, shingle ASC LIMIT 20
         """,
-        "sessionization": sessionization_sql,
         "events_rollup": """
             SELECT event_type, strftime(ts, '%Y-%m-%d') AS day, count(*) AS n,
                    round(sum(value), 4) AS sum_value

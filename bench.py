@@ -222,9 +222,9 @@ def timed_queries(names: list[str]) -> dict[str, float]:
         # sample outside the window.
         walls: dict[str, list] = {name: [] for name in names}
         for _ in range(QREPS):
-            # cold-wall fairness only (round 7): slots that cache
-            # internally now own cleanup (caching.own_result unpersists
-            # before returning), so nothing RELIES on this — but any
+            # cold-wall fairness only: slots keep intermediates through
+            # caching.materialize (checkpoints that leave nothing in the
+            # CacheManager), so nothing RELIES on this — but any
             # still-live cached plan Spark's CacheManager could match
             # against a re-derived identical plan would serve reps 2..N
             # warm, and min-of-N would report the warm wall as if cold

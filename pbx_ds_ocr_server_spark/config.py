@@ -29,20 +29,11 @@ class ExtractConfig:
     #     merges model markdown; 'markdown' renders the kernel's span
     #     classifications as ## heading / - list_item / fenced pre) ---
     mode: str = "plain"                 # 'plain' | 'markdown'
-    # --- backend selection (reference op U2: kernel plug + fallback) ---
-    html_backend: str = "fast"          # 'fast' (regex tokenizer) | 'strict'
-                                        # (html.parser events); recorded in
-                                        # job lineage (sources/writer.py)
 
     def __post_init__(self) -> None:
-        # an unknown value would silently run the default kernel/renderer
-        # while lineage records the name that was asked for
+        # an unknown value would silently run the plain renderer
         if self.mode not in ("plain", "markdown"):
             raise ValueError(f"mode={self.mode!r}: expected 'plain' or 'markdown'")
-        if self.html_backend not in ("fast", "strict"):
-            raise ValueError(
-                f"html_backend={self.html_backend!r}: expected 'fast' or 'strict'"
-            )
 
 
 DEFAULT_CONFIG = ExtractConfig()

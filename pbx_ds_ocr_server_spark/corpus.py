@@ -661,18 +661,20 @@ def make_pdf(
                 return _pc.aes128_cbc_encrypt(k, raw, iv)
             return _pc.rc4(_pc.object_key(key, obj_num, 0), raw)
 
-        import re as _re
-
         for idx, body in enumerate(objs):
-            m = _re.search(rb"stream\r?\n(.*?)\r?\nendstream", body, _re.DOTALL)
-            if m:
-                enc = enc_bytes(idx + 1, m.group(1))
-                body = body[: m.start(1)] + enc + body[m.end(1) :]
+            # every stream written above carries a true direct /Length:
+            # frame the data by it, so a final 0x0D data byte is encrypted
+            # too (an EOL-before-endstream scan would leave it out)
+            lm = re.search(rb"/Length (\d+)", body)
+            sm = re.search(rb"stream\n", body)
+            if lm and sm:
+                start, end = sm.end(), sm.end() + int(lm.group(1))
+                enc = enc_bytes(idx + 1, body[start:end])
                 # AES grows the stream (IV + PKCS#7 pad): keep /Length true
-                body = _re.sub(
-                    rb"/Length \d+", b"/Length %d" % len(enc), body, count=1
+                objs[idx] = (
+                    body[: lm.start(1)] + b"%d" % len(enc)
+                    + body[lm.end(1) : start] + enc + body[end:]
                 )
-                objs[idx] = body
         if info_idx is not None:
             # strings are encrypted with the same per-object key as streams
             enc_t = enc_bytes(info_idx + 1, info_raw)
@@ -1234,13 +1236,44 @@ def make_warc(rows: list[dict], gzip_members: bool = False) -> bytes:
     return b"".join(warc_record_bytes(r, gzip_members) for r in rows)
 
 
+_HTML_WRAPS = {
+    "plain": wrap_html_plain,
+    "paras_bare": wrap_html_paras_bare,
+    "paras_boiler": wrap_html_paras,
+    "structured": wrap_html_structured,
+}
+# PDF modes → make_pdf arguments; each document spans 2 + doc_id % 3 pages
+_PDF_WRAPS = {
+    "pdf_simple": dict(font="simple"),
+    "pdf_cid_aes": dict(font="cid", encrypt="aes-128"),
+    "pdf_embedded_tt": dict(font="embedded_tt"),
+}
+
+
 def wrapped_docs_df(spark, documents_path: str, mode: str):
     """documents(doc_id, text) → (url='doc://<id>', html) with the text
-    deterministically wrapped in HTML. Modes: 'plain' (one <p>, full
-    boilerplate), 'paras_bare' (10-word <p> chunks, no boilerplate),
-    'paras_boiler' (10-word chunks inside the full nav/sidebar/footer
-    template). Used by the oracle-checked extraction queries."""
+    deterministically wrapped in HTML or a PDF. HTML modes: 'plain' (one
+    <p>, full boilerplate), 'paras_bare' (10-word <p> chunks, no
+    boilerplate), 'paras_boiler' (10-word chunks inside the full
+    nav/sidebar/footer template), 'structured' (headings, lists, pre). PDF
+    modes lay the text out with ``pdf_pages_for`` (8-word lines): 'pdf_simple'
+    (Type1 Helvetica), 'pdf_cid_aes' (Type0 + ToUnicode CMap, AES-128
+    encrypted), 'pdf_embedded_tt' (Type0 whose text lives only in the
+    embedded TrueType cmap). Used by the oracle-checked extraction queries."""
     from pbx_ds_ocr_server_spark.partitioning import ensure_min_partitions
+
+    if mode in _PDF_WRAPS:
+        kw = _PDF_WRAPS[mode]
+
+        def wrap(norm: str, doc_id: int) -> bytes:
+            return make_pdf(pdf_pages_for(norm, 2 + doc_id % 3), **kw)
+    elif mode in _HTML_WRAPS:
+        html = _HTML_WRAPS[mode]
+
+        def wrap(norm: str, doc_id: int) -> bytes:
+            return html(norm).encode("utf-8")
+    else:
+        raise ValueError(f"unknown wrap mode: {mode}")
 
     docs = ensure_min_partitions(
         spark.read.parquet(documents_path).select("doc_id", "text")
@@ -1248,20 +1281,13 @@ def wrapped_docs_df(spark, documents_path: str, mode: str):
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                norm = " ".join(str(r.text).split())
-                if mode == "plain":
-                    h = wrap_html_plain(norm)
-                elif mode == "paras_bare":
-                    h = wrap_html_paras_bare(norm)
-                elif mode == "paras_boiler":
-                    h = wrap_html_paras(norm)
-                elif mode == "structured":
-                    h = wrap_html_structured(norm)
-                else:
-                    raise ValueError(f"unknown wrap mode: {mode}")
-                out.append({"url": f"doc://{r.doc_id}", "html": h.encode("utf-8")})
+            out = [
+                {
+                    "url": f"doc://{r.doc_id}",
+                    "html": wrap(" ".join(str(r.text).split()), int(r.doc_id)),
+                }
+                for r in pdf.itertuples()
+            ]
             yield pd.DataFrame(out, columns=["url", "html"])
 
     return docs.mapInPandas(gen, "url string, html binary")

@@ -320,9 +320,9 @@ def assemble_page(
     cfg: ExtractConfig,
     title: str | None,
 ) -> PageResult:
-    """Shared block→PageResult assembly (both HTML kernels, U2 seam): the
-    span/offset math and markdown rendering are part of the frozen output
-    spec and must be identical across backends."""
+    """Shared block→PageResult assembly (this kernel and its strict test
+    oracle): the span/offset math and markdown rendering are part of the
+    frozen output spec and must be identical across both."""
     parts: list[str] = []
     spans: list[Span] = []
     byte_off = 0

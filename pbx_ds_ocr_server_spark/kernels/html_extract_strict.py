@@ -1,16 +1,13 @@
-"""Strict-mode HTML kernel — the second backend behind the U2 seam.
+"""Strict HTML kernel: the second reading the HTML kernel is diffed against.
 
-Implements the SAME frozen extraction spec as ``html_extract`` (the fast
-regex-tokenizer kernel) on top of the stdlib event parser
+Implements the SAME frozen extraction spec as ``html_extract`` (the regex-
+tokenizer kernel that ``extract()`` runs) on top of the stdlib event parser
 (``html.parser.HTMLParser``), which follows the HTML5 tokenizer rules for
-entity references, broken attributes and CDATA content. Backend selection
-is ``ExtractConfig.html_backend`` ('fast' | 'strict'); the job runner
-records the choice in lineage.
-
-Why two kernels (reference op U2, backend selection/fallback,
-``/root/reference/app/services/model_manager.py``): a kernel bug in ONE
-implementation is observable as divergence between the two on the same
-bytes — the golden byte-identity suite runs both and diffs them.
+entity references, broken attributes and CDATA content. Nothing in the
+package calls it: it is the independent second reading that
+``tests/test_html_strict_kernel.py`` diffs the production kernel against
+(golden corpus, wrapped modes, every behavioral snippet), so a bug in
+either implementation shows up as divergence on the same bytes.
 
 Known, documented divergence corners (outside the golden corpus):
   * ``max_block_chars`` counts decoded characters here but raw

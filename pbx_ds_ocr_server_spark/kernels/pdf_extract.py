@@ -60,6 +60,10 @@ from pbx_ds_ocr_server_spark.kernels.pdf_fonts import (
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b(.*?)endobj", re.DOTALL)
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.DOTALL)
+_STREAM_KW_RE = re.compile(rb"stream\r?\n")
+# /Length: a direct integer, or an indirect `N G R` reference (group 2)
+_LENGTH_RE = re.compile(rb"/Length\s+(\d+)(\s+\d+\s+R)?")
+_ENDSTREAM_RE = re.compile(rb"\s*endstream")
 _KIDS_RE = re.compile(rb"/Kids\s*\[(.*?)\]", re.DOTALL)
 _REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
 # /Contents: single-ref AND array form (both everywhere in real crawls)
@@ -150,6 +154,33 @@ _N_RE = re.compile(rb"/N\s+(\d+)")
 _FIRST_RE = re.compile(rb"/First\s+(\d+)")
 
 
+def _stream_raw(body: bytes, objects: dict[int, bytes]) -> bytes | None:
+    """The raw (still filtered/encrypted) bytes of ``body``'s stream, or
+    None when it has none.
+
+    Framed by /Length: exactly that many bytes after the ``stream`` EOL,
+    when ``endstream`` follows them after optional whitespace. The length
+    is a direct integer or an ``N 0 R`` resolved through ``objects``.
+    Otherwise (no usable /Length, or one that does not land on
+    ``endstream``: crawled files carry wrong lengths) the data ends at the
+    first EOL + ``endstream`` — a rule that drops a final 0x0D data byte,
+    so it is only the fallback."""
+    sm = _STREAM_KW_RE.search(body)
+    if not sm:
+        return None
+    lm = _LENGTH_RE.search(body, 0, sm.start())
+    if lm:
+        n = int(lm.group(1))
+        if lm.group(2):
+            ref = objects.get(n, b"").strip()
+            n = int(ref) if ref.isdigit() else -1
+        end = sm.end() + n
+        if n >= 0 and _ENDSTREAM_RE.match(body, end):
+            return body[sm.end() : end]
+    m = _STREAM_RE.search(body, sm.start())
+    return m.group(1) if m else None
+
+
 def _expand_objstm(body: bytes, out: dict[int, bytes]) -> None:
     """Unpack a cross-reference object stream (/Type /ObjStm): header is N
     (obj-number, offset) integer pairs, then the concatenated objects at
@@ -157,10 +188,10 @@ def _expand_objstm(body: bytes, out: dict[int, bytes]) -> None:
     modern xref-stream PDFs need this expansion."""
     nm = _N_RE.search(body)
     fm = _FIRST_RE.search(body)
-    sm = _STREAM_RE.search(body)
-    if not (nm and fm and sm):
+    raw = _stream_raw(body, out)
+    if not (nm and fm and raw is not None):
         return
-    data, ok = _apply_filters(body, sm.group(1))
+    data, ok = _apply_filters(body, raw)
     if not ok:
         return
     n = int(nm.group(1))
@@ -328,17 +359,19 @@ def _apply_filters(body: bytes, data: bytes) -> tuple[bytes, bool]:
     return data, True
 
 
-def _stream_data(body: bytes, obj_id: int, decrypt) -> tuple[bytes, bool]:
-    """Decode one object's stream → (data, had_raw). ``had_raw`` is True
-    when a non-empty raw stream existed, even if decoding failed — the
+def _stream_data(
+    objects: dict[int, bytes], obj_id: int, decrypt
+) -> tuple[bytes, bool]:
+    """Decode object ``obj_id``'s stream → (data, had_raw). ``had_raw`` is
+    True when a non-empty raw stream existed, even if decoding failed — the
     signal that separates a genuinely blank page from a parser blind spot
     (unsupported filter, undecodable data). ``decrypt(obj_id, raw)`` runs
     BEFORE the /Filter chain (the spec's order: encryption wraps the
     filtered bytes)."""
-    sm = _STREAM_RE.search(body)
-    if not sm:
+    body = objects.get(obj_id, b"")
+    data = _stream_raw(body, objects)
+    if data is None:
         return b"", False
-    data = sm.group(1)
     had_raw = bool(data)
     if decrypt is not None:
         data = decrypt(obj_id, data)
@@ -364,7 +397,7 @@ def _content_stream(
         had_any = False
         for rm in _REF_RE.finditer(am.group(1)):
             oid = int(rm.group(1))
-            data, had = _stream_data(objects.get(oid, b""), oid, decrypt)
+            data, had = _stream_data(objects, oid, decrypt)
             had_any = had_any or had
             if data:
                 parts.append(data)
@@ -372,8 +405,8 @@ def _content_stream(
     m = _CONTENTS_RE.search(page_body)
     if m:
         oid = int(m.group(1))
-        return _stream_data(objects.get(oid, b""), oid, decrypt)
-    return _stream_data(page_body, page_oid, decrypt)
+        return _stream_data(objects, oid, decrypt)
+    return _stream_data(objects, page_oid, decrypt)
 
 
 # inline images: BI <dict> ID <binary...> EI — the binary body is raw
@@ -875,7 +908,7 @@ def _font_program(
     if not fm:
         return None
     oid = int(fm.group(1))
-    data, _ = _stream_data(objects.get(oid, b""), oid, decrypt)
+    data, _ = _stream_data(objects, oid, decrypt)
     return data or None
 
 
@@ -998,7 +1031,7 @@ def _embedded_cid_decoder(
     cmap_bytes = None
     if c2g:
         oid = int(c2g.group(1))
-        cmap_bytes, _ = _stream_data(objects.get(oid, b""), oid, decrypt)
+        cmap_bytes, _ = _stream_data(objects, oid, decrypt)
         if not cmap_bytes:
             return None  # declared stream map we cannot read: decline
     prog = _font_program(objects, desc_font, _FONTFILE2_RE, decrypt)
@@ -1083,7 +1116,7 @@ def _font_decoder(
     tm = _TOUNICODE_RE.search(body)
     if tm:
         oid = int(tm.group(1))
-        data, _ = _stream_data(objects.get(oid, b""), oid, decrypt)
+        data, _ = _stream_data(objects, oid, decrypt)
         if data:
             # when the CMap omits codespacerange, the code width follows
             # the FONT type: 2-byte codes for composite (Type0/Identity-H)

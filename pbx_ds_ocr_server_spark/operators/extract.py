@@ -166,16 +166,7 @@ def _extract_one(url: str, payload: bytes, cfg: ExtractConfig) -> list[dict]:
                          title=page.title, status=ST_OK)]
         if ctype == "unknown":
             return [dict(base, status=ST_NOOP)]
-        # U2 backend seam: config-selected kernel, both implement the same
-        # frozen spec (golden suite diffs them; choice recorded in lineage)
-        if cfg.html_backend == "strict":
-            from pbx_ds_ocr_server_spark.kernels.html_extract_strict import (
-                extract_html_strict,
-            )
-
-            page = extract_html_strict(payload, cfg)
-        else:
-            page = extract_html(payload, cfg)
+        page = extract_html(payload, cfg)
         return [dict(base, n_pages=1, seq=0, page_index=1,
                      page_text=page.text, spans=_span_dicts(page.spans),
                      title=page.title, status=ST_OK)]

@@ -55,15 +55,15 @@ from pbx_ds_ocr_server_spark.operators.extract import (
     extract,
 )
 
-# Schema history: v2 added `html_backend` (which kernel produced a bucket).
-# Appending into a lineage dir written by v1 produces mixed-schema parquet —
-# readers must use spark.read.option("mergeSchema", "true") (read_lineage
-# does) and will see NULL html_backend for v1 rows.
+# Schema history: v2 added a trailing column naming the HTML kernel that
+# produced a bucket; v3 drops it again, since one kernel remains. A lineage
+# dir that mixes versions is mixed-schema parquet — readers must use
+# spark.read.option("mergeSchema", "true") (read_lineage does): the merged
+# schema keeps that column last, NULL for v3 rows.
 LINEAGE_SCHEMA = (
     "run_id string, bucket int, n_urls long, n_succeeded long,"
     " n_noop long, n_rejected long, n_failed long,"
-    " started_at double, finished_at double, status string, error string,"
-    " html_backend string"
+    " started_at double, finished_at double, status string, error string"
 )
 METRICS_SCHEMA = (
     "run_id string, docs_out long, wall_seconds double,"
@@ -278,7 +278,6 @@ def run_extract_job(
                 finished_at=time.time(),
                 status="succeeded",
                 error=None,
-                html_backend=cfg.html_backend,  # U2: which kernel produced this bucket
             ),
         )
         with lock:

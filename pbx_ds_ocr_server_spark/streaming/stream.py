@@ -1,17 +1,12 @@
-"""Micro-batch streaming wrappers.
+"""Micro-batch streaming wrapper.
 
 The reference's queue (``/root/reference/app/services/queue.py:23-149``) is a
 work-dispatch buffer, not an event-time stream — so the streaming story here
-is deliberately thin and idiomatic:
-
-  * ``extract_stream`` — file-source ``readStream`` over incoming page
-    parquet drops, running the SAME ``extract()`` batch composition per
-    micro-batch via ``foreachBatch`` (exactly-once per micro-batch with the
-    checkpointed file source; the batch function is pure, so replays are
-    idempotent modulo output-append semantics).
-  * ``events_windowed_stream`` — event-time tumbling-window aggregation with
-    a watermark for late data: the canonical Structured Streaming shape, so
-    the engine surface covers windows/watermarks/late-data handling.
+is one thin wrapper: ``extract_stream``, a file-source ``readStream`` over
+incoming page parquet drops, running the SAME ``extract()`` batch composition
+per micro-batch via ``foreachBatch`` (exactly-once per micro-batch with the
+checkpointed file source; the batch function is pure, so replays are
+idempotent modulo output-append semantics).
 """
 
 from __future__ import annotations
@@ -59,47 +54,3 @@ def extract_stream(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def events_windowed_stream(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Event-time tumbling window with watermark (works on both batch and
-    streaming DataFrames — same plan shape). ``ts`` is cast to TIMESTAMP:
-    watermarks reject TIMESTAMP_NTZ (parquet default in the test tables)."""
-    return (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        # group on the window STRUCT (not .start) — projecting .start inside
-        # the groupBy strips the event-time column and breaks append mode
-        .groupBy(F.window("ts", window), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.col("window").start.alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
-def dedup_stream(
-    events: DataFrame,
-    key_cols: tuple[str, ...] = ("event_id",),
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact dedup: drop repeats of the same key arriving within
-    the watermark window (``dropDuplicatesWithinWatermark``) — the streaming
-    twin of ``dedup_exact`` for at-least-once upstream sources (a crawl
-    frontier that re-emits urls, a replayed Kafka topic). State per key is
-    bounded by the watermark horizon, so this runs forever at constant
-    memory — the property a plain ``dropDuplicates`` on a stream lacks."""
-    return (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(list(key_cols))
-    )

@@ -258,6 +258,16 @@ def test_bucket_runs_no_readback_or_bookkeeping_jobs(spark, corpus, tmp_path, mo
     assert spark.read.parquet(os.path.join(out, "_metrics")).count() == 1
 
 
+# the lineage DDL before html_backend was dropped, spelled out: a dir
+# written by that runner holds rows of exactly this shape
+LINEAGE_V2_SCHEMA = (
+    "run_id string, bucket int, n_urls long, n_succeeded long,"
+    " n_noop long, n_rejected long, n_failed long,"
+    " started_at double, finished_at double, status string, error string,"
+    " html_backend string"
+)
+
+
 def _mixed_font_pdf() -> bytes:
     # one font decodes, one loses its codes → succeeded_partial
     stream = b"BT /F1 12 Tf 72 700 Td (readable) Tj /F2 12 Tf 0 -20 Td <0041> Tj ET"
@@ -280,16 +290,16 @@ def _mixed_font_pdf() -> bytes:
 def mixed_lineage_run(spark, corpus, tmp_path_factory):
     """A job over the corpus plus partial-text PDFs, with a size cap that
     rejects the largest docs, into a ``_lineage`` dir that already holds a
-    row written by Spark (as earlier versions of the runner did)."""
+    row written by Spark under the v2 schema (as earlier versions of the
+    runner did: the row a resume into such a dir finds)."""
     import os
 
     from pbx_ds_ocr_server_spark.config import ExtractConfig
-    from pbx_ds_ocr_server_spark.sources.writer import LINEAGE_SCHEMA
 
     out = str(tmp_path_factory.mktemp("mixed_lineage"))
     spark.createDataFrame(
         [("old", 99, 1, 1, 0, 0, 0, 0.0, 1.0, "succeeded", None, "fast")],
-        LINEAGE_SCHEMA,
+        LINEAGE_V2_SCHEMA,
     ).coalesce(1).write.parquet(os.path.join(out, "_lineage"))
     partial = spark.createDataFrame(
         [(f"pdf://partial/{i}", _mixed_font_pdf()) for i in range(6)],
@@ -340,11 +350,16 @@ def test_lineage_dir_mixes_spark_and_pyarrow_rows(spark, mixed_lineage_run):
     from pbx_ds_ocr_server_spark.sources.writer import LINEAGE_SCHEMA
 
     lin = read_lineage(spark, mixed_lineage_run)
-    want = StructType.fromDDL(LINEAGE_SCHEMA)
+    # the current fields, then the v2 row's trailing column
+    want = StructType.fromDDL(LINEAGE_SCHEMA + ", html_backend string")
     assert [(f.name, f.dataType) for f in lin.schema] == [
         (f.name, f.dataType) for f in want
     ]
-    assert sorted(r.bucket for r in lin.collect()) == list(range(N_BUCKETS)) + [99]
+    rows = lin.collect()
+    assert sorted(r.bucket for r in rows) == list(range(N_BUCKETS)) + [99]
+    assert {r.bucket: r.html_backend for r in rows if r.html_backend} == {
+        99: "fast"
+    }
     for sub in ("_lineage", "_metrics"):
         names = os.listdir(os.path.join(mixed_lineage_run, sub))
         # Spark's own checksum files are dot-prefixed too; a temp row is not

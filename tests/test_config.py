@@ -23,10 +23,7 @@ def test_every_config_field_is_read():
     assert fields - read == set()
 
 
-def test_unknown_mode_or_backend_is_rejected():
-    # lineage records cfg.html_backend, so an unknown name would claim a
-    # kernel that never ran
-    with pytest.raises(ValueError, match="html_backend"):
-        ExtractConfig(html_backend="Strict")
+def test_unknown_mode_is_rejected():
+    # an unknown name would silently render plain text
     with pytest.raises(ValueError, match="mode"):
         ExtractConfig(mode="html")

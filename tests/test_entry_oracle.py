@@ -71,8 +71,9 @@ def test_all_queries_carry_oracles():
     """Tripwire (replaces a permanently-skipped empty parametrize): every
     driver slot must stay oracle-bearing. A nonempty set here means an
     oracle went missing and that query silently downgraded to the driver's
-    weaker rows-only check."""
-    assert set(QUERIES) - set(ORACLES) == set()
+    weaker rows-only check. The driver checks exactly 50 slots."""
+    assert len(QUERIES) == 50
+    assert set(ORACLES) == set(QUERIES)
 
 
 def test_entry_smoke(spark):

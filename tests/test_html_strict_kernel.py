@@ -1,6 +1,6 @@
-"""U2 backend seam: the strict (html.parser) kernel must be byte-identical
-to the fast (regex tokenizer) kernel on the golden corpus and on every
-behavioral snippet the fast kernel is specified by."""
+"""The strict (html.parser) kernel, kept as a test oracle, must be
+byte-identical to the production (regex tokenizer) kernel on the golden
+corpus and on every behavioral snippet that kernel is specified by."""
 
 import pandas as pd
 import pytest
@@ -86,33 +86,3 @@ def test_strict_matches_fast_on_wrapped_modes():
         for wrap in (wrap_html_plain, wrap_html_paras, wrap_html_structured):
             _compare(wrap(norm).encode("utf-8"), ExtractConfig())
 
-
-def test_strict_backend_selected_by_config(spark):
-    from pyspark.sql import functions as F
-
-    from pbx_ds_ocr_server_spark.operators.extract import extract
-
-    df = spark.createDataFrame(
-        [("s://1", b"<body><nav>no</nav><p>strict body</p></body>")],
-        "url string, html binary",
-    )
-    row = extract(df, ExtractConfig(html_backend="strict")).first()
-    assert row.text == "strict body" and row.status == "succeeded"
-
-
-def test_lineage_records_backend(spark, tmp_path):
-    from pbx_ds_ocr_server_spark.sources.writer import (
-        read_lineage,
-        run_extract_job,
-    )
-
-    df = spark.createDataFrame(
-        [(f"s://{i}", b"<body><p>x y z</p></body>") for i in range(8)],
-        "url string, html binary",
-    )
-    out = str(tmp_path / "job")
-    run_extract_job(
-        spark, df, out, n_buckets=2, cfg=ExtractConfig(html_backend="strict")
-    )
-    backends = {r.html_backend for r in read_lineage(spark, out).collect()}
-    assert backends == {"strict"}

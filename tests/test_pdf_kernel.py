@@ -77,6 +77,62 @@ def test_flate_compressed_stream():
     assert extract_pdf(pdf)[0].text == "flate text"
 
 
+def _flate_ending_in_cr() -> tuple[bytes, str]:
+    """A FlateDecode content stream whose compressed bytes end in 0x0D
+    (about 1 in 256 do), found by search rather than hard-coded."""
+    for i in range(20_000):
+        text = f"cr framed {i}"
+        comp = zlib.compress(b"BT 72 700 Td (%s) Tj ET" % text.encode())
+        if comp.endswith(b"\r"):
+            return comp, text
+    raise AssertionError("no compressed stream ends in 0x0D")
+
+
+def test_stream_framed_by_length_keeps_final_cr_byte():
+    # an EOL-before-endstream scan reads the data's own final 0x0D as the
+    # CR of a CRLF and drops it: zlib then fails and the page goes blank
+    comp, text = _flate_ending_in_cr()
+    assert extract_pdf(_one_page_pdf(comp, filter_flate=True))[0].text == text
+
+
+def test_stream_framed_by_indirect_length():
+    comp, text = _flate_ending_in_cr()
+    pdf = (
+        b"%PDF-1.4\n"
+        b"1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+        b"2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n"
+        b"3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>\nendobj\n"
+        b"4 0 obj\n<< /Length 5 0 R /Filter /FlateDecode >>\nstream\n"
+        + comp + b"\nendstream\nendobj\n"
+        b"5 0 obj\n" + str(len(comp)).encode() + b"\nendobj\n"
+    )
+    assert extract_pdf(pdf)[0].text == text
+
+
+def test_stream_with_wrong_length_falls_back_to_endstream():
+    # crawled files carry wrong /Length values: a length that does not
+    # land on endstream is ignored, never trusted
+    content = b"BT 72 700 Td (length lies) Tj ET"
+    for wrong in (b"3", b"999", b"7 0 R"):
+        pdf = _one_page_pdf(content).replace(
+            b"/Length %d" % len(content), b"/Length " + wrong
+        )
+        assert extract_pdf(pdf)[0].text == "length lies", wrong
+
+
+def test_aes_stream_ending_in_cr_decrypts():
+    # AES ciphertext ending in 0x0D: cut by one byte it is no longer a
+    # whole number of blocks, and the page was lost
+    for i in range(20_000):
+        text = f"aes framed {i}"
+        pdf = make_pdf([[(72.0, 700.0, text)]], encrypt="aes-128")
+        if b"\r\nendstream" in pdf:
+            break
+    else:
+        raise AssertionError("no AES stream ends in 0x0D")
+    assert extract_pdf(pdf)[0].text == text
+
+
 def test_tj_array_and_tstar():
     pdf = _one_page_pdf(
         b"BT /F1 12 Tf 20 TL 72 700 Td [(hello ) (world)] TJ T* (next line) Tj ET"

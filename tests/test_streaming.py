@@ -1,15 +1,10 @@
 """Structured Streaming front-end: file-source micro-batches reuse the batch
-extract(); event-time window agg with watermark."""
-
-import os
+extract()."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from pbx_ds_ocr_server_spark.streaming.stream import (
-    events_windowed_stream,
-    extract_stream,
-)
+from pbx_ds_ocr_server_spark.streaming.stream import extract_stream
 
 
 @pytest.fixture(scope="module")
@@ -44,57 +39,3 @@ def test_extract_stream_restart_is_noop(spark, corpus, staged_stream_input):
     q.awaitTermination(120)
     assert spark.read.parquet(out).count() == corpus.count()
 
-
-def test_events_windowed_stream_batch_parity(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    win = events_windowed_stream(ev)
-    ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    direct = ev.groupBy(
-        F.window("ts", "1 hour").start.alias("window_start"), "event_type"
-    ).agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
-    assert win.exceptAll(direct).count() == 0
-    assert direct.exceptAll(win).count() == 0
-
-
-def test_events_windowed_stream_runs_as_stream(spark, tmp_path):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    inp = str(tmp_path / "ev_in")
-    ev.write.parquet(inp)
-    stream = spark.readStream.schema(ev.schema).parquet(inp)
-    agg = events_windowed_stream(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("ev_win_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # append mode emits only watermark-closed windows; with a bounded replay
-    # everything except the trailing watermark horizon closes
-    n_stream = spark.sql("select count(*) from ev_win_test").first()[0]
-    assert n_stream > 0
-
-
-def test_dedup_stream_drops_watermark_window_repeats(spark, tmp_path):
-    from pbx_ds_ocr_server_spark.streaming.stream import dedup_stream
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").limit(200)
-    doubled = ev.unionByName(ev)  # at-least-once upstream: every event twice
-    inp = str(tmp_path / "dd_in")
-    doubled.write.parquet(inp)
-    stream = spark.readStream.schema(doubled.schema).parquet(inp)
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("memory")
-        .queryName("dd_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "dd_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select event_id, count(*) c from dd_test group by event_id")
-    assert got.filter("c > 1").count() == 0  # repeats dropped
-    assert got.count() == 200  # every distinct key survives
